@@ -27,12 +27,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from harmonize_search_analyze_spark.operators.dedup import shingles_sql
+from harmonize_search_analyze_spark.operators.dedup import (
+    band_join,
+    jaccard_sql,
+    minhash_bands,
+    minhash_signatures,
+    shingles_sql,
+)
 from harmonize_search_analyze_spark.operators.text import tokens_sql
-
-#: checkpoint the fuzzy-decontamination candidate list so its two
-#: consumers don't re-run the band join (round 11) — A/B-rig flag
-_FDC_CANDS_CKPT = True
 
 
 def contamination_flags(
@@ -318,17 +320,6 @@ ORDER BY {doc_id}
 # -- fuzzy (near-dup) decontamination -----------------------------------------
 
 
-def _band_frame(
-    sigs: DataFrame, id_col: str, *, k: int, rows_per_band: int
-) -> DataFrame:
-    """(id, band_idx, band_key) explode — the ONE banding used by every
-    LSH path (delegates to dedup._lsh_bands so a banding change cannot
-    silently diverge between the self-join and cross-corpus paths)."""
-    from harmonize_search_analyze_spark.operators.dedup import _lsh_bands
-
-    return _lsh_bands(sigs, id_col, k, rows_per_band)
-
-
 def fuzzy_decontaminate(
     corpus: DataFrame,
     bench: DataFrame,
@@ -359,8 +350,6 @@ def fuzzy_decontaminate(
     (bounded) candidate list back to both shingle frames — the standard
     sig→band→verify LSH contract, with banding recall (a pair missed by
     every band is missed; raise k / lower rows_per_band to tighten)."""
-    from harmonize_search_analyze_spark.operators.dedup import minhash_signatures
-
     # band tuning is the operative knob: the candidate threshold is
     # s* ~ (1/b)^(1/r) for b bands of r rows, so match it to ``threshold``
     # (r=4, b=2 targets ~0.84 for 0.9-dedup; the r=2 default of the
@@ -376,25 +365,9 @@ def fuzzy_decontaminate(
     sig_b = minhash_signatures(
         bench, bench_id_col, bench_text_col, k=k, n=n, seed=seed
     )
-    bands_c = _band_frame(sig_c, id_col, k=k, rows_per_band=rows_per_band)
-    bands_b = _band_frame(sig_b, bench_id_col, k=k, rows_per_band=rows_per_band)
-    cands = (
-        bands_c.join(
-            F.broadcast(bands_b),
-            ["band_idx", "band_key"],
-        )
-        .select(id_col, bench_id_col)
-        .distinct()
-    )
-    if _FDC_CANDS_CKPT:
-        # Round-11: the candidate list feeds BOTH the corpus-side
-        # semi-join and the final verify join; without a cut the whole
-        # corpus band build + band join executed twice under one action
-        # (profiled as the query's two heaviest stages, 8.9 s + 4.1 s
-        # runTime, each re-reading the band shuffle). The bounded pair
-        # list is checkpointed once; localCheckpoint (not persist) keeps
-        # AQE coalescing for both consumers.
-        cands = cands.localCheckpoint(eager=False)
+    bands_c = minhash_bands(sig_c, id_col, k, rows_per_band)
+    bands_b = minhash_bands(sig_b, bench_id_col, k, rows_per_band)
+    cands = band_join(bands_c, F.broadcast(bands_b)).toDF(id_col, bench_id_col)
     # shingle only the documents that actually have a candidate: the
     # semi-join bounds the second tokenization pass to the candidate
     # fraction instead of re-tokenizing the full 100 TB corpus
@@ -408,8 +381,6 @@ def fuzzy_decontaminate(
         F.col(bench_id_col),
         F.expr(shingles_sql(bench_text_col, "spark", n)).alias("b_sh"),
     )
-    from harmonize_search_analyze_spark.operators.dedup import jaccard_sql
-
     j = jaccard_sql("c_sh", "b_sh", "spark")
     return (
         cands.join(sh_c, id_col)

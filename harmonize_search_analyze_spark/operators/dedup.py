@@ -211,6 +211,64 @@ def minhash_signatures_from_shingles(
     return _signatures_from_exploded(exploded, id_col, k=k, seed=seed)
 
 
+# -- banded candidate join -----------------------------------------------------
+
+
+def band_frame(df: DataFrame, id_col: str, keys: list | str) -> DataFrame:
+    """``(id, band_idx, band_key)`` rows: one posexplode of the per-band
+    key columns ``keys`` (or of an existing array column named ``keys``),
+    so ``band_idx`` is the key's position. Every LSH family (MinHash,
+    SimHash, sign-hyperplane) bands through this one shape."""
+    arr = F.col(keys) if isinstance(keys, str) else F.array(*keys)
+    return df.select(
+        F.col(id_col), F.posexplode(arr).alias("band_idx", "band_key")
+    )
+
+
+def band_join(left: DataFrame, right: DataFrame | None = None) -> DataFrame:
+    """Distinct ``(id1, id2)`` pairs of ids sharing a bucket in ANY band of
+    two :func:`band_frame` outputs — the equi-join on (band_idx, band_key)
+    that is the LSH candidate stage, shuffle-friendly on a short key.
+
+    With no ``right`` it is the self-join, keeping ``id1 < id2``: the band
+    frame is persisted (Spark does not CSE across join branches, so both
+    sides would otherwise re-run the signature build; the frame is
+    n_docs x n_bands rows) and unpersists when the result, or anything it
+    is ``transfer()``-ed to, is dropped. With a ``right`` it is the plain
+    cross-corpus join: no id predicate (the two id spaces are unrelated)
+    and nothing persisted — pass ``F.broadcast(right)`` for an MB-sized
+    side."""
+    self_join = right is None
+    if self_join:
+        left = right = left.persist()
+    pairs = left.toDF("id1", "band_idx", "band_key").join(
+        right.toDF("id2", "band_idx", "band_key"), ["band_idx", "band_key"]
+    )
+    if self_join:
+        pairs = pairs.where(F.col("id1") < F.col("id2"))
+    out = pairs.select("id1", "id2").distinct()
+    return tether(out, left) if self_join else out
+
+
+def minhash_bands(
+    sigs: DataFrame, id_col: str, k: int, rows_per_band: int
+) -> DataFrame:
+    """Band frame of a MinHash signature frame (id, mh_0..mh_{k-1}): band b
+    keys on ``mh_{b*r}..mh_{b*r+r-1}`` joined as one string."""
+    if rows_per_band < 1 or k % rows_per_band:
+        raise ValueError(
+            f"rows_per_band must be a positive divisor of k={k}, "
+            f"got {rows_per_band}"
+        )
+    return band_frame(sigs, id_col, [
+        F.concat_ws(
+            "_", *[F.col(f"mh_{b + r}").cast("string")
+                   for r in range(rows_per_band)]
+        )
+        for b in range(0, k, rows_per_band)
+    ])
+
+
 def lsh_candidate_pairs(
     sigs: DataFrame,
     id_col: str,
@@ -219,46 +277,9 @@ def lsh_candidate_pairs(
     rows_per_band: int = 2,
 ) -> DataFrame:
     """Banding: two docs are candidates iff some band of their signatures
-    matches exactly. Self-equi-join on (band_idx, band_key) — the classic
-    shuffle-friendly LSH join; emits id pairs with id1 < id2."""
-    n_bands = k // rows_per_band
-    bands = []
-    for bi in range(n_bands):
-        cols = [
-            F.col(f"mh_{bi * rows_per_band + r}").cast("string")
-            for r in range(rows_per_band)
-        ]
-        bands.append(
-            F.struct(
-                F.lit(bi).alias("band_idx"),
-                F.concat_ws("_", *cols).alias("band_key"),
-            )
-        )
-    exploded = sigs.select(
-        F.col(id_col), F.explode(F.array(*bands)).alias("band")
-    ).select(id_col, "band.band_idx", "band.band_key")
-    # the self-join would otherwise evaluate the signature computation
-    # twice (Spark does not CSE across join branches); the band frame is
-    # tiny (n_docs x n_bands rows) so persisting it is always worth it
-    exploded = exploded.persist()
-    left = exploded.alias("l")
-    right = exploded.alias("r")
-    out = (
-        left.join(
-            right,
-            (F.col("l.band_idx") == F.col("r.band_idx"))
-            & (F.col("l.band_key") == F.col("r.band_key"))
-            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-        )
-        .select(
-            F.col(f"l.{id_col}").alias("id1"),
-            F.col(f"r.{id_col}").alias("id2"),
-        )
-        .distinct()
-    )
-    # band frame unpersists when the candidate frame (or anything it is
-    # transfer()ed to) is dropped — no leak in long-lived sessions
-    return tether(out, exploded)
+    matches exactly (:func:`band_join` self-join); emits id pairs with
+    id1 < id2."""
+    return band_join(minhash_bands(sigs, id_col, k, rows_per_band))
 
 
 def near_dup_pairs_lsh(
@@ -540,10 +561,10 @@ def simhash_candidate_pairs(
     bits: int = SIMHASH_BITS,
 ) -> DataFrame:
     """Banded candidate generation over a sketch frame (id, simhash):
-    explode each sketch into (d+1) contiguous bit-bands, self-equi-join on
-    (band_idx, band_key) — the same shuffle-friendly band-join shape as
-    ``lsh_candidate_pairs``. Exact by pigeonhole (see simhash_band_bounds);
-    downstream Hamming verification filters false positives.
+    each sketch's (d+1) contiguous bit-bands are the band keys of one
+    :func:`band_join` self-join, the primitive ``lsh_candidate_pairs``
+    uses too. Exact by pigeonhole (see simhash_band_bounds); downstream
+    Hamming verification filters false positives.
 
     Scale note: pruning power is band entropy. At the default 64-bit
     sketch, d=3 gives 4 bands x 16 bits (65k keys per band) — real
@@ -551,38 +572,13 @@ def simhash_candidate_pairs(
     sketches degrade: 32 bits at d=6 is 4-5-bit bands (16-32 keys),
     approaching all-pairs. The operator works for any (bits, d); keep
     bands >= ~8 bits by widening the sketch before raising d."""
-    n_bands = max_hamming + 1
-    bands = []
-    for bi, (lo, width) in enumerate(simhash_band_bounds(bits, n_bands)):
+    keys = []
+    for lo, width in simhash_band_bounds(bits, max_hamming + 1):
         # width 64 (single band over a full sketch): (1 << 64) - 1
         # overflows a signed long; -1 is the same all-ones mask
         mask = (1 << width) - 1 if width < 64 else -1
-        key = F.shiftright(F.col("simhash"), lo).bitwiseAND(F.lit(mask))
-        bands.append(
-            F.struct(
-                F.lit(bi).alias("band_idx"), key.alias("band_key")
-            )
-        )
-    exploded = (
-        sk.select(F.col(id_col), F.explode(F.array(*bands)).alias("band"))
-        .select(id_col, "band.band_idx", "band.band_key")
-        .persist()
-    )
-    left, right = exploded.alias("l"), exploded.alias("r")
-    out = (
-        left.join(
-            right,
-            (F.col("l.band_idx") == F.col("r.band_idx"))
-            & (F.col("l.band_key") == F.col("r.band_key"))
-            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-        )
-        .select(
-            F.col(f"l.{id_col}").alias("id1"),
-            F.col(f"r.{id_col}").alias("id2"),
-        )
-        .distinct()
-    )
-    return tether(out, exploded)
+        keys.append(F.shiftright(F.col("simhash"), lo).bitwiseAND(F.lit(mask)))
+    return band_join(band_frame(sk, id_col, keys))
 
 
 def simhash_near_dup_pairs_banded(
@@ -1143,9 +1139,9 @@ def lsh_incremental(
     ``new_state`` is state ∪ batch signatures, the input to the next call.
 
     Within-batch pairs are ordered id-asc (id1 < id2); cross pairs pair
-    the batch id with the state id. Candidates come from a single-band
-    exact-match join (the LSH bucketing), est-filtered after — one
-    band-keyed shuffle against the batch side only; the state side is
+    the batch id with the state id. Candidates come from :func:`band_join`
+    over k/2 bands of 2 rows (so ``k`` must be even), est-filtered after —
+    band-keyed shuffles against the batch side only; the state side is
     scanned once per call, never self-joined.
 
     Equivalence contract (tested): feeding batches b1, b2, ... through
@@ -1163,43 +1159,19 @@ def lsh_incremental(
         batch, id_col, text_col, k=k, n=n, seed=seed
     ).persist()
     mh_cols = [f"mh_{i}" for i in range(k)]
-    # referenced by the self-join's two branches AND the cross join —
-    # persist so the band explode runs once (no CSE across branches)
-    bands_b = _lsh_bands(sigs_b, id_col, k, rows_per_band).persist()
-    # within-batch candidates: band self-join, id1 < id2
-    l, r = bands_b.alias("lb"), bands_b.alias("rb")
-    within = (
-        l.join(
-            r,
-            (F.col("lb.band_idx") == F.col("rb.band_idx"))
-            & (F.col("lb.band_key") == F.col("rb.band_key"))
-            & (F.col(f"lb.{id_col}") < F.col(f"rb.{id_col}")),
-        )
-        .select(
-            F.col(f"lb.{id_col}").alias("id_new"),
-            F.col(f"rb.{id_col}").alias("id_prior"),
-        )
-        .distinct()
-    )
-    pairs = within
+    # within-batch candidates: the band self-join persists bands_b, so
+    # the cross join below reads the same cached band explode
+    bands_b = minhash_bands(sigs_b, id_col, k, rows_per_band)
+    within = band_join(bands_b)
+    pairs = within.toDF("id_new", "id_prior")
     if state is not None:
-        bands_s = _lsh_bands(state, id_col, k, rows_per_band)
         cross = (
-            bands_b.alias("lb")
-            .join(
-                bands_s.alias("rb"),
-                (F.col("lb.band_idx") == F.col("rb.band_idx"))
-                & (F.col("lb.band_key") == F.col("rb.band_key"))
-                # a re-ingested id must not pair with its own stored row
-                & (F.col(f"lb.{id_col}") != F.col(f"rb.{id_col}")),
-            )
-            .select(
-                F.col(f"lb.{id_col}").alias("id_new"),
-                F.col(f"rb.{id_col}").alias("id_prior"),
-            )
-            .distinct()
+            band_join(bands_b, minhash_bands(state, id_col, k, rows_per_band))
+            # a re-ingested id must not pair with its own stored row
+            .where(F.col("id1") != F.col("id2"))
+            .toDF("id_new", "id_prior")
         )
-        pairs = within.unionByName(cross)
+        pairs = pairs.unionByName(cross)
     sl = sigs_b.select(F.col(id_col).alias("id_new"),
                        *[F.col(c).alias(f"l_{c}") for c in mh_cols])
     if state is None:
@@ -1230,30 +1202,7 @@ def lsh_incremental(
         .select("id_new", "id_prior", "est_jaccard")
     )
     new_state = prior_sigs
-    return tether(tether(dups, sigs_b), bands_b), new_state
-
-
-def _lsh_bands(
-    sigs: DataFrame, id_col: str, k: int, rows_per_band: int
-) -> DataFrame:
-    """(id, band_idx, band_key) explode of a signature frame (the
-    lsh_candidate_pairs banding, shared)."""
-    n_bands = k // rows_per_band
-    bands = []
-    for bi in range(n_bands):
-        cols = [
-            F.col(f"mh_{bi * rows_per_band + r}").cast("string")
-            for r in range(rows_per_band)
-        ]
-        bands.append(
-            F.struct(
-                F.lit(bi).alias("band_idx"),
-                F.concat_ws("_", *cols).alias("band_key"),
-            )
-        )
-    return sigs.select(
-        F.col(id_col), F.explode(F.array(*bands)).alias("band")
-    ).select(id_col, "band.band_idx", "band.band_key")
+    return tether(transfer(within, dups), sigs_b), new_state
 
 
 def pair_metrics(

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from harmonize_search_analyze_spark.functions.caching import tether
+from harmonize_search_analyze_spark.functions.caching import tether, transfer
 from harmonize_search_analyze_spark.sources.tables import local_frame
 
 #: one-slice parallelize for driver-assembled centroid/codebook frames
@@ -566,12 +566,16 @@ def embedding_near_dup_lsh(
     reordering noise (the DuckDB oracle keeps the fold formulation). Band
     keys are internal ints here vs bit-strings in the oracle: only
     (id1, id2, cosine) reach the output, and candidate sets are identical
-    because key EQUALITY is all the join uses. The band self-equi-join
-    shuffles on (band_idx, band_key) — the same profile as MinHash-LSH
-    banding (dedup.py); the verify cosine stays an exact sequential fold on
-    candidates only.
+    because key EQUALITY is all the join uses. The key array feeds
+    ``dedup.band_join``, the one band self-join every LSH family shares;
+    the verify cosine stays an exact sequential fold on candidates only.
     """
     import numpy as np
+
+    from harmonize_search_analyze_spark.operators.dedup import (
+        band_frame,
+        band_join,
+    )
 
     planes_mat = np.asarray(
         hyperplanes(dim, n_bands * bits_per_band, seed), dtype=np.float64
@@ -602,23 +606,8 @@ def embedding_near_dup_lsh(
     ).mapInPandas(
         sig, f"{id_col} long, v array<double>, nrm double, keys array<long>"
     ).persist()
-    exploded = sig_df.select(
-        id_col, F.posexplode("keys").alias("band_idx", "band_key")
-    )
-    cands = (
-        exploded.alias("l")
-        .join(
-            exploded.alias("r"),
-            (F.col("l.band_idx") == F.col("r.band_idx"))
-            & (F.col("l.band_key") == F.col("r.band_key"))
-            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-        )
-        .select(
-            F.col(f"l.{id_col}").alias("id1"),
-            F.col(f"r.{id_col}").alias("id2"),
-        )
-        .distinct()
-    )
+    cands = band_join(band_frame(sig_df, id_col, "keys"))
+
     def verify(batches):
         import pandas as pd
 
@@ -653,7 +642,8 @@ def embedding_near_dup_lsh(
         .select("id1", "id2", "v1", "v2", "n1", "n2")
         .mapInPandas(verify, "id1 long, id2 long, cosine double")
     )
-    # signature frame unpersists when the result is released/GC'd
+    # signature and band frames unpersist when the result is released/GC'd
+    transfer(cands, out)
     return tether(out, sig_df)
 
 

@@ -277,8 +277,6 @@ EXPERIMENTS["spearman"] = exp_spearman
 _FLAG_EXPS = {
     "dsir": ("harmonize_search_analyze_spark.operators.dsir",
              "_DSIR_EAGER", ["dsir_sample"]),
-    "fdc": ("harmonize_search_analyze_spark.operators.contamination",
-            "_FDC_CANDS_CKPT", ["fuzzy_decontaminate"]),
     "getok": ("harmonize_search_analyze_spark.operators.graph",
               "_GE_TOK_CKPT", ["graph_explore"]),
     "llr": ("harmonize_search_analyze_spark.operators.text",

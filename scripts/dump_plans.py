@@ -35,7 +35,6 @@ def main() -> None:
     if r11flags is not None:
         # flip every round-11 A/B knob so the same rig captures the
         # BEFORE (off) and AFTER (on) plan shapes
-        import harmonize_search_analyze_spark.operators.contamination as ct
         import harmonize_search_analyze_spark.operators.dsir as ds
         import harmonize_search_analyze_spark.operators.graph as gr
         import harmonize_search_analyze_spark.operators.ordering as od
@@ -43,7 +42,6 @@ def main() -> None:
         import harmonize_search_analyze_spark.operators.text as tx
 
         ds._DSIR_EAGER = r11flags
-        ct._FDC_CANDS_CKPT = r11flags
         gr._GE_TOK_CKPT = r11flags
         tx._LLR_WINDOW_MARGINS = r11flags
         sm._SMALL_FRAME_ONE_SLICE = r11flags

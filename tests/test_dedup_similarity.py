@@ -570,6 +570,89 @@ def test_simhash_banded_pruning_power(spark):
     assert cands < 0.10 * all_pairs, (cands, all_pairs)
 
 
+_BANDS = "band_idx int, band_key string"
+
+
+def test_band_join_self_distinct_ordered_pairs(spark):
+    """Self-join: ids sharing buckets in several bands yield ONE pair; no
+    (i, i) self-pairs and no reversed (j, i) duplicates; an equal key in a
+    DIFFERENT band is not a match."""
+    from harmonize_search_analyze_spark.operators.dedup import (
+        band_frame,
+        band_join,
+    )
+
+    bands = spark.createDataFrame(
+        [(2, 0, "a"), (1, 0, "a"), (1, 1, "b"), (2, 1, "b"), (3, 1, "b"),
+         (3, 0, "c"), (4, 2, "a")],
+        f"doc_id long, {_BANDS}",
+    )
+    out = band_join(bands)
+    assert sorted(tuple(r) for r in out.collect()) == [(1, 2), (1, 3), (2, 3)]
+    assert out.columns == ["id1", "id2"]
+    release(out)
+
+    # per-band key columns and an array column band identically
+    sigs = spark.createDataFrame(
+        [(1, "a", "b"), (2, "a", "x"), (3, "y", "b")],
+        "doc_id long, k0 string, k1 string",
+    )
+    from_cols = band_frame(sigs, "doc_id", [F.col("k0"), F.col("k1")])
+    from_arr = band_frame(
+        sigs.select("doc_id", F.array("k0", "k1").alias("keys")),
+        "doc_id", "keys",
+    )
+    assert from_cols.columns == ["doc_id", "band_idx", "band_key"]
+    assert sorted(from_cols.collect()) == sorted(from_arr.collect())
+    out = band_join(from_arr)
+    assert sorted(tuple(r) for r in out.collect()) == [(1, 2), (1, 3)]
+    release(out)
+
+
+def test_band_join_cross_keeps_equal_ids_and_empty_is_empty(spark):
+    """Cross join: a corpus id and a bench id that are numerically equal
+    still pair (the id spaces are unrelated, so no id predicate applies),
+    each pair once; empty band frames give empty results on both paths."""
+    from harmonize_search_analyze_spark.operators.dedup import band_join
+
+    corpus = spark.createDataFrame(
+        [(7, 0, "k"), (7, 1, "m"), (8, 0, "z"), (9, 1, "m")],
+        f"doc_id long, {_BANDS}",
+    )
+    bench = spark.createDataFrame(
+        [(7, 0, "k"), (7, 1, "m"), (5, 1, "z")], f"bench_id long, {_BANDS}"
+    )
+    assert sorted(
+        tuple(r) for r in band_join(corpus, F.broadcast(bench)).collect()
+    ) == [(7, 7), (9, 7)]
+
+    empty = corpus.limit(0)
+    assert band_join(corpus, empty).collect() == []
+    out = band_join(empty)
+    assert out.collect() == []
+    release(out)
+
+
+@pytest.mark.parametrize("k, rows_per_band", [(8, 0), (8, -2), (9, 2), (8, 3)])
+def test_minhash_bands_rejects_non_divisor(spark, k, rows_per_band):
+    """rows_per_band must divide k: 0 used to be a ZeroDivisionError and a
+    non-divisor silently left the trailing mh_ columns out of every band
+    (lost recall with no error)."""
+    from harmonize_search_analyze_spark.operators.dedup import (
+        lsh_candidate_pairs,
+        minhash_bands,
+    )
+
+    sigs = spark.createDataFrame(
+        [(1, *range(k))],
+        "doc_id long, " + ", ".join(f"mh_{i} long" for i in range(k)),
+    )
+    with pytest.raises(ValueError, match="rows_per_band"):
+        minhash_bands(sigs, "doc_id", k, rows_per_band)
+    with pytest.raises(ValueError, match="rows_per_band"):
+        lsh_candidate_pairs(sigs, "doc_id", k=k, rows_per_band=rows_per_band)
+
+
 def _persisted_ids(spark) -> set:
     jmap = spark.sparkContext._jsc.getPersistentRDDs()
     return {k for k in jmap.keySet().toArray()}
