@@ -2085,39 +2085,21 @@ def suggest_completion(
     )
 
 
-def dashboard(
+def filter_context(
     df: DataFrame,
-    panels: dict[str, "callable"],
     query: Column | None = None,
     time_field: str | None = None,
     time_from=None,
     time_to=None,
-    cache: bool = True,
     now=None,
-    global_panels: dict[str, "callable"] | None = None,
     kql: str | None = None,
     kql_default_fields: list[str] | None = None,
-) -> dict[str, DataFrame]:
-    """Run a panel set over one shared filter context (viz 9 dashboard +
-    ``views.js:97-115`` query injection): base query AND UI query AND global
-    time window applied once, then each panel aggregates the same frame.
-
-    ``panels`` maps name -> fn(DataFrame) -> DataFrame. The filtered frame is
-    cached when more than one panel will reuse it (the reference gets this
-    "for free" by ES query caching; in Spark we must ask for it). The cache
-    is refcount-tethered to the returned panels: it unpersists once every
-    panel frame is released/GC'd (caching.release for eager cleanup).
-
-    ``global_panels`` implements ES's ``global`` aggregation: those panels
-    evaluate against the UNFILTERED frame — the "3 of 120 incidents match"
-    denominator every Kibana total widget needs — while sharing the same
-    result dict.
-
-    ``kql`` is the Kibana search bar on top of the dashboard: KQL text
-    compiled through ``plans.kql`` and ANDed into the shared filter
-    context exactly like the UI's query-bar filter joins the dashboard's
-    own query (``now`` pins its date-math too).
-    """
+) -> DataFrame:
+    """The dashboard's shared filter context (viz 9 + ``views.js:97-115``
+    query injection): KQL search bar AND UI query AND global time window,
+    applied to ``df``. Time bounds may be datetimes OR ES date-math
+    strings resolved against ``now`` — the reference's global filter is
+    literally from:"now-20y", to:"now" (config.js:31-32)."""
     filtered = df
     if kql is not None:
         from harmonize_search_analyze_spark.plans.kql import kql_query
@@ -2137,8 +2119,6 @@ def dashboard(
     if query is not None:
         filtered = filtered.where(query)
     if time_field is not None:
-        # bounds may be datetimes OR ES date-math strings — the reference's
-        # global filter is literally from:"now-20y", to:"now" (config.js:31-32)
         if is_date_math(time_from):
             time_from = parse_date_math(time_from, now=now)
         if is_date_math(time_to):
@@ -2147,6 +2127,46 @@ def dashboard(
             filtered = filtered.where(F.col(time_field) >= F.lit(time_from))
         if time_to is not None:
             filtered = filtered.where(F.col(time_field) <= F.lit(time_to))
+    return filtered
+
+
+def dashboard(
+    df: DataFrame,
+    panels: dict[str, "callable"],
+    query: Column | None = None,
+    time_field: str | None = None,
+    time_from=None,
+    time_to=None,
+    cache: bool = True,
+    now=None,
+    global_panels: dict[str, "callable"] | None = None,
+    kql: str | None = None,
+    kql_default_fields: list[str] | None = None,
+) -> dict[str, DataFrame]:
+    """Run a panel set over one shared filter context
+    (``filter_context``: base query AND UI query AND global time window
+    applied once), then each panel aggregates the same frame.
+
+    ``panels`` maps name -> fn(DataFrame) -> DataFrame. The filtered frame is
+    cached when more than one panel will reuse it (the reference gets this
+    "for free" by ES query caching; in Spark we must ask for it). The cache
+    is refcount-tethered to the returned panels: it unpersists once every
+    panel frame is released/GC'd (caching.release for eager cleanup).
+
+    ``global_panels`` implements ES's ``global`` aggregation: those panels
+    evaluate against the UNFILTERED frame — the "3 of 120 incidents match"
+    denominator every Kibana total widget needs — while sharing the same
+    result dict.
+
+    ``kql`` is the Kibana search bar on top of the dashboard: KQL text
+    compiled through ``plans.kql`` and ANDed into the shared filter
+    context exactly like the UI's query-bar filter joins the dashboard's
+    own query (``now`` pins its date-math too).
+    """
+    filtered = filter_context(
+        df, query, time_field, time_from, time_to, now=now, kql=kql,
+        kql_default_fields=kql_default_fields,
+    )
     if cache and len(panels) > 1:
         filtered = filtered.cache()
         out = {name: fn(filtered) for name, fn in panels.items()}

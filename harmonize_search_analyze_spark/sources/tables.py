@@ -143,7 +143,10 @@ def load_table(
 # and every cell is CAST to the declared type in the SQL text, pinning the
 # column wire types exactly as an explicit StructType does. Parse cost grows
 # with the parameter count and crosses over with the RDD path around ~300
-# parameters (measured), hence the _MAX_PARAMS fallback.
+# parameters (measured), so above _MAX_PARAMS cells the rows travel as one
+# Arrow batch instead (``createDataFrame(pandas_df, schema)``): also a
+# LocalRelation, ~25 ms to build and collect a 672-cell frame against
+# ~160-190 ms and one job for the pickled-RDD path (local[4]).
 _LOCAL_FRAME_MAX_PARAMS = 256
 
 
@@ -177,11 +180,13 @@ def local_frame(
 ) -> DataFrame:
     """Drop-in for ``spark.createDataFrame(rows, schema)`` for SMALL
     driver-assembled frames (stats rows, query-token frames, centroid-free
-    metadata): builds a JVM ``LocalRelation`` via a parameterized VALUES
-    statement when possible, falling back to ``createDataFrame`` whenever
-    the input is empty, large, or uses cell types the literal binder does
-    not cover (lists/dicts/Rows). Values and column wire types are
-    identical either way — the fallback IS the reference implementation.
+    metadata): builds a JVM ``LocalRelation`` — via a parameterized VALUES
+    statement up to ``_LOCAL_FRAME_MAX_PARAMS`` cells, via one Arrow batch
+    above that — so collecting it runs no Spark job and starts no Python
+    worker. Falls back to ``createDataFrame`` whenever the schema is
+    unknown or a cell is outside the type allowlist below (lists/dicts/
+    Rows, mismatched types). Values and column wire types are identical
+    either way — the fallback IS the reference implementation.
 
     Column NULLABILITY may differ from createDataFrame's all-nullable
     default (a VALUES column with no NULL cell infers non-nullable).
@@ -212,11 +217,7 @@ def local_frame(
     else:
         schema_t = None
 
-    if (
-        schema_t is None
-        or not rows
-        or len(rows) * len(schema_t.fields) > _LOCAL_FRAME_MAX_PARAMS
-    ):
+    if schema_t is None:
         return spark.createDataFrame(rows, schema)
 
     # Exact python-type-per-field allowlist. STRICTER than
@@ -247,6 +248,23 @@ def local_frame(
             return spark.createDataFrame(rows, schema)
 
     fields = schema_t.fields
+    if not rows:
+        # one all-NULL row cut by LIMIT 0: the optimizer folds it into an
+        # empty LocalRelation, so even an empty frame collects without a job
+        return _values_frame(spark, [(None,) * len(fields)], fields).limit(0)
+    if len(rows) * len(fields) > _LOCAL_FRAME_MAX_PARAMS:
+        return _arrow_frame(spark, rows, schema_t)
+    out = _values_frame(spark, rows, fields)
+    if [(f.name, f.dataType) for f in out.schema.fields] != [
+        (f.name, f.dataType) for f in fields
+    ]:  # pragma: no cover - type pin must never drift silently
+        return spark.createDataFrame(rows, schema)
+    return out
+
+
+def _values_frame(spark: SparkSession, rows: list, fields) -> DataFrame:
+    """``rows`` as a parameterized ``VALUES`` statement, each cell CAST to
+    its field's type."""
     n = len(fields)
     ddl = [f.dataType.simpleString() for f in fields]
     parts = []
@@ -258,11 +276,32 @@ def local_frame(
         ) + ")")
         for i in range(n):
             args[f"p{base + i}"] = row[i]
-    out = spark.sql("VALUES " + ",".join(parts), args=args).toDF(
+    return spark.sql("VALUES " + ",".join(parts), args=args).toDF(
         *[f.name for f in fields]
     )
-    if [(f.name, f.dataType) for f in out.schema.fields] != [
-        (f.name, f.dataType) for f in fields
-    ]:  # pragma: no cover - type pin must never drift silently
-        return spark.createDataFrame(rows, schema)
-    return out
+
+
+def _arrow_frame(spark: SparkSession, rows: list, schema_t) -> DataFrame:
+    """``rows`` as one Arrow batch (the session's Arrow setting applies).
+    Columns are object-dtype pandas Series, so a ``None`` in an integral
+    column stays null instead of turning the column into float64, and
+    columns are matched by position, so repeated names survive."""
+    import datetime
+
+    import pandas as pd
+
+    epoch = datetime.datetime(1970, 1, 1, tzinfo=datetime.timezone.utc)
+    cols = {}
+    for i, f in enumerate(schema_t.fields):
+        vals = [r[i] for r in rows]
+        if isinstance(f.dataType, T.TimestampType):
+            # createDataFrame's own conversion (a naive datetime is local
+            # wall time, resolved by time.mktime), carried as aware UTC so
+            # both paths agree under any process time zone, DST gaps too
+            vals = [
+                None if v is None else epoch + datetime.timedelta(
+                    microseconds=f.dataType.toInternal(v))
+                for v in vals
+            ]
+        cols[i] = pd.Series(vals, dtype=object)
+    return spark.createDataFrame(pd.DataFrame(cols), schema_t)

@@ -4,6 +4,8 @@ and the catalog's wildcard-union semantics."""
 
 from __future__ import annotations
 
+import datetime as dt
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -2371,3 +2373,163 @@ def test_forecast_backtest_constant_series_null_mase(spark):
     # a constant series: forecasts are exact (mae 0) and the naive
     # denominator is 0 -> MASE pinned NULL, not a division abort
     assert r["mae"] == 0.0 and r["mase"] is None
+
+
+# -- crime_dashboard: one grouping-sets aggregation --------------------------
+
+def _per_panel_crime_dashboard(frame, query_ast=None, time_from=None,
+                               time_to=None, time_field="datetime",
+                               geohash_precision=2):
+    """The per-panel composition ``crime_dashboard`` replaced: ``dashboard``
+    over ``terms`` / ``nested_terms`` / ``terms_multi`` / ``geohash_grid``."""
+    from harmonize_search_analyze_spark.operators.dashboards import (
+        split_geolocation,
+    )
+    from harmonize_search_analyze_spark.plans.compiler import compile_query
+
+    panels = {
+        "description_pie": lambda d: terms(d, "description", k=10),
+        "day_hour_pie": lambda d: nested_terms(
+            d, "dayofweek", "hour", outer_k=10, inner_k=24),
+        "dataset_table": lambda d: terms_multi(
+            d, ["city", "notebookhtml"], k=20),
+        "city_pie": lambda d: terms(d, "city", k=10),
+        "incident_map": lambda d: geohash_grid(
+            split_geolocation(d), "_lat", "_lon", precision=geohash_precision),
+    }
+    return dashboard(
+        frame, panels,
+        query=compile_query(query_ast) if query_ast else None,
+        time_field=time_field if (time_from or time_to) else None,
+        time_from=time_from, time_to=time_to,
+    )
+
+
+def _planted(counts: dict, n: int, rng) -> list:
+    """``n`` cells holding each value ``counts[v]`` times, NULL elsewhere,
+    shuffled."""
+    cells = [v for v, c in counts.items() for _ in range(c)]
+    assert len(cells) <= n
+    cells += [None] * (n - len(cells))
+    rng.shuffle(cells)
+    return cells
+
+
+@pytest.fixture(scope="module")
+def crime_frame(spark):
+    """Harmonized-shaped rows: NULLs in every key column, count ties
+    straddling each panel's k cut, 14 descriptions, 13 cities x 3 pages,
+    13 outer x 30 inner day/hour keys, malformed geolocations."""
+    import random
+
+    from pyspark.sql import types as T
+
+    rng = random.Random(17)
+    n = 400
+    # ranks 9-11 tie at 4 (the k=10 cut falls inside the tie)
+    descr = _planted({f"descr{i:02d}": c for i, c in enumerate(
+        [30, 20, 12, 9, 8, 8, 6, 5, 4, 4, 4, 3, 2, 1])}, n, rng)
+    cities = _planted({f"city{i:02d}": c for i, c in enumerate(
+        [40, 35, 30, 25, 25, 20, 18, 15, 12, 12, 12, 9, 3])}, n, rng)
+    pages = _planted({"a.html": 150, "b.html": 120, "c.html": 90},
+                     n, rng)
+    # the d00 outer key holds 30 hours (12 of them tied at 2 across the
+    # inner_k=24 cut); outer totals tie at the outer_k=10 cut
+    pairs = [("d00", h) for h in range(30) for _ in range(3 if h < 12 else 2)]
+    for i, total in enumerate([40, 30, 24, 20, 16, 12, 12, 9, 9, 9, 9, 4], 1):
+        pairs += [(f"d{i:02d}", (i * 7 + j) % 30) for j in range(total)]
+    pairs += [(None, 3)] * 5 + [("d01", None)] * 5
+    pairs += [(None, None)] * (n - len(pairs))
+    rng.shuffle(pairs)
+    points = ["39.28,-76.62", "39.31,-76.60", "42.40,-83.10",
+              "34.05,-118.24", "34.10,-118.30", "51.50,-0.12",
+              "-33.86,151.21", "48.85,2.35"]
+    geo = [points[i % len(points)] for i in range(n - 40)]
+    geo += ["abc,def", "39.28", "", "39.28,x", ",", None] * 6 + [None] * 4
+    rng.shuffle(geo)
+    rows = []
+    for i in range(n):
+        ts = (None if i % 37 == 0
+              else dt.datetime(1995 + i % 31, 1 + i % 12, 1 + i % 28, i % 24))
+        rows.append((descr[i], pairs[i][0], pairs[i][1], cities[i],
+                     pages[i], geo[i], ts))
+    schema = T.StructType([
+        T.StructField("description", T.StringType()),
+        T.StructField("dayofweek", T.StringType()),
+        T.StructField("hour", T.IntegerType()),
+        T.StructField("city", T.StringType()),
+        T.StructField("notebookhtml", T.StringType()),
+        T.StructField("geolocation", T.StringType()),
+        T.StructField("datetime", T.TimestampType()),
+    ])
+    return spark.createDataFrame(rows, schema)
+
+
+@pytest.mark.parametrize("request_kw", [
+    {},
+    {"query_ast": {"bool": {"must": [{"terms": {"description": [
+        f"descr{i:02d}" for i in range(2, 14)]}}]}},
+     "time_from": dt.datetime(2000, 1, 1),
+     "time_to": dt.datetime(2020, 1, 1)},
+    {"time_from": "now-20y"},
+    {"time_to": "now-10y", "geohash_precision": 1},
+], ids=["unfiltered", "query_and_window", "date_math", "date_math_to"])
+def test_crime_dashboard_matches_per_panel_dashboard(crime_frame, request_kw):
+    from harmonize_search_analyze_spark.operators.dashboards import (
+        crime_dashboard,
+    )
+
+    got = crime_dashboard(crime_frame, **request_kw)
+    want = _per_panel_crime_dashboard(crime_frame, **request_kw)
+    assert list(got) == list(want)
+    for name in want:
+        assert got[name].dtypes == want[name].dtypes, name
+        assert [tuple(r) for r in got[name].collect()] == [
+            tuple(r) for r in want[name].collect()
+        ], name
+    if not request_kw:  # every k cut is exercised on the full frame
+        sizes = {n: got[n].count() for n in got}
+        assert sizes["description_pie"] == sizes["city_pie"] == 10
+        assert sizes["dataset_table"] == 20
+        day_hour = got["day_hour_pie"].collect()
+        assert len({r["dayofweek"] for r in day_hour}) == 10
+        assert sum(r["dayofweek"] == "d00" for r in day_hour) == 24
+
+
+def test_crime_dashboard_zero_match_keeps_schema(crime_frame):
+    from harmonize_search_analyze_spark.operators.dashboards import (
+        crime_dashboard,
+    )
+
+    ast = {"bool": {"must": [{"terms": {"city": ["nowhere"]}}]}}
+    got = crime_dashboard(crime_frame, query_ast=ast)
+    want = _per_panel_crime_dashboard(crime_frame, query_ast=ast)
+    for name in want:
+        assert got[name].dtypes == want[name].dtypes, name
+        assert got[name].collect() == [] == want[name].collect(), name
+
+
+def test_crime_dashboard_one_action(spark, crime_frame):
+    """The refresh is one aggregation (at most its shuffle-map job and its
+    result job); collecting the five panels runs no job at all."""
+    from harmonize_search_analyze_spark.operators.dashboards import (
+        crime_dashboard,
+    )
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def jobs(group: str) -> int:
+        sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+        return len(tracker.getJobIdsForGroup(group))
+
+    try:
+        sc.setJobGroup("crime-dashboard-refresh", "refresh")
+        panels = crime_dashboard(crime_frame, time_from="now-20y")
+        sc.setJobGroup("crime-dashboard-collect", "collect")
+        rows = {n: p.collect() for n, p in panels.items()}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert all(rows.values())
+    assert 1 <= jobs("crime-dashboard-refresh") <= 2
+    assert jobs("crime-dashboard-collect") == 0

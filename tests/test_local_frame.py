@@ -1,7 +1,8 @@
-"""local_frame (sources/tables.py): the JVM-LocalRelation fast path for
-small driver-assembled frames must be value- and wire-type-identical to
+"""local_frame (sources/tables.py): the JVM-LocalRelation fast paths for
+small driver-assembled frames (VALUES up to the parameter cap, one Arrow
+batch above it) must be value- and wire-type-identical to
 spark.createDataFrame, and must fall back to createDataFrame whenever the
-input is empty, oversized, or uses non-atomic cell types."""
+schema is unknown or a cell is outside the type allowlist."""
 
 from __future__ import annotations
 
@@ -82,13 +83,44 @@ def test_fallback_on_array_cells(spark):
     assert "LocalRelation" not in plan  # took the createDataFrame path
 
 
-def test_fallback_on_param_overflow(spark):
-    n_rows = _LOCAL_FRAME_MAX_PARAMS // 2 + 1  # 2 cols -> just over the cap
-    rows = [(i, f"s{i}") for i in range(n_rows)]
-    df = local_frame(spark, rows, "i BIGINT, s STRING")
-    assert df.count() == n_rows
+def _collect_jobs(spark, df) -> tuple[list, int]:
+    sc = spark.sparkContext
+    group = f"local-frame-{id(df)}"
+    try:
+        sc.setJobGroup(group, "collect")
+        rows = df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    return rows, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_param_overflow_takes_arrow_local_relation(spark):
+    # 4 cols -> well over the cap (day_hour_pie's 7 x 24 x 4 shape);
+    # NULLs in every column, timestamps on both sides of a DST change
+    rows = [
+        (i if i % 5 else None, i / 3 if i % 7 else None,
+         f"s{i}" if i % 3 else None,
+         datetime.datetime(2021, 3, 14, 1, 30) + datetime.timedelta(hours=i)
+         if i % 4 else None)
+        for i in range(168)
+    ]
+    assert len(rows) * 4 > _LOCAL_FRAME_MAX_PARAMS
+    schema = "n BIGINT, x DOUBLE, s STRING, ts TIMESTAMP"
+    df = local_frame(spark, rows, schema)
+    ref = spark.createDataFrame(rows, schema)
+    assert df.dtypes == ref.dtypes
+    got, jobs = _collect_jobs(spark, df)
+    assert got == ref.collect()  # same rows, same order
+    assert jobs == 0
     plan = df._jdf.queryExecution().optimizedPlan().toString()
-    assert "LocalRelation" not in plan
+    assert plan.startswith("LocalRelation")
+
+
+def test_empty_rows_collect_without_job(spark):
+    df = local_frame(spark, [], "i INT, s STRING")
+    assert df.dtypes == [("i", "int"), ("s", "string")]
+    assert _collect_jobs(spark, df) == ([], 0)
 
 
 def test_generator_rows_materialize_once(spark):
