@@ -4449,8 +4449,9 @@ def weighted_percentile(
         .agg(F.sum(w).alias("__w"))
     )
     # lazy_bounds=False: persisted-output shape — the eager boundary
-    # sample pre-fills the cache and measured faster (1.01/1.15 vs
-    # 1.13/1.45 min/med, 8-trial matched-slot; see lorenz_gini's note)
+    # sample pre-fills the cache and measured faster (4 cores, sf0.1,
+    # 20 alternating trials: median 0.458 vs 0.488 s lazy; PERFORMANCE.md
+    # decision 9; see lorenz_gini's note)
     cum = prefix_sums(
         per, ["__v"], {"__w": "__cw"}, lazy_bounds=False
     ).persist()

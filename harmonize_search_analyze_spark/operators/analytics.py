@@ -684,6 +684,7 @@ def ks_drift(
     (:func:`ordering.prefix_sums` — corpus-sized on continuous values,
     so never an unpartitioned window); the max is a 1-row reduce. Raw
     data is scanned once."""
+    from harmonize_search_analyze_spark.functions.caching import transfer
     from harmonize_search_analyze_spark.operators.ordering import (
         prefix_sums,
     )
@@ -710,12 +711,15 @@ def ks_drift(
         "v", "na", "nb", gap.alias("g")
     )
     best = gaps.orderBy(F.desc("g"), F.asc("v")).limit(1)
-    return best.select(
+    out = best.select(
         F.col("na").cast("bigint").alias("n_a"),
         F.col("nb").cast("bigint").alias("n_b"),
         F.round("g", 6).alias("ks_stat"),
         F.col("v").alias("ks_at"),
     )
+    # dropping cum at return would unpersist its tethered input before
+    # the caller's action (a second scan of the raw rows)
+    return transfer(cum, out)
 
 
 def chi2_independence(
@@ -4883,15 +4887,14 @@ def lorenz_gini(
             F.sum(v).alias("__m"),
         )
     )
-    # lazy_bounds=False (round 11): cum is PERSISTED with two consumers;
-    # the in-plan boundary broadcast measured consistently SLOWER here
-    # (matched-slot 8-trial A/B: 1.79/2.09 min/med vs 1.75/1.90 eager) —
-    # the eager construct-time sample pre-fills the persist cache before
-    # the consumers race, which wins when the prefix frame is cached.
-    # weighted_percentile (same persisted-output shape) measured the
-    # same way; the rest of the rank battery keeps the lazy default
-    # (roc_auc 0.63 vs 0.97, kruskal 0.97 vs 1.17, mann_whitney 0.78 vs
-    # 0.85, negative_sampling 1.68 vs 2.13, pareto 0.68 vs 0.79).
+    # lazy_bounds=False: cum is PERSISTED with two consumers; the
+    # in-plan boundary broadcast measured SLOWER here (4 cores, sf0.1,
+    # 20 alternating trials: median 0.489 s eager vs 0.532 s lazy;
+    # PERFORMANCE.md decision 9) — the eager construct-time sample
+    # pre-fills the persist cache before the consumers race, which wins
+    # when the prefix frame is cached. weighted_percentile (same
+    # persisted-output shape) measured the same way; the rest of the
+    # rank battery keeps the lazy default.
     cum = prefix_sums(
         per, ["__v"], {"__c": "__cc", "__m": "__cm"}, lazy_bounds=False
     ).persist()

@@ -33,10 +33,6 @@ from harmonize_search_analyze_spark.operators.sampling import (
     sample_hash_sql,
 )
 
-#: boundary sampling as an in-plan broadcast (round 11) instead of an
-#: eager per-query driver collect job — A/B-rig flag
-_LAZY_BOUNDS = True
-
 
 def global_order(
     df: DataFrame,
@@ -70,10 +66,8 @@ def global_order(
     spec = [(c, ascending) for c in sort_cols]
     order = _sort_columns(spec)
     src = df.persist()
-    bounds_frame = None
-    if _LAZY_BOUNDS:
-        n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-        bounds_frame = _lazy_bounds_frame(src, spec[:1], n)
+    n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
+    bounds_frame = _lazy_bounds_frame(src, spec[:1], n)
     tagged = _with_bucket(
         src, spec, num_partitions, "__pid", None, bounds_frame
     )
@@ -862,7 +856,7 @@ def prefix_sums(
     num_partitions: int | None = None,
     boundaries: list | None = None,
     bounds_frame: DataFrame | None = None,
-    lazy_bounds: bool | None = None,
+    lazy_bounds: bool = True,
 ) -> DataFrame:
     """Inclusive running sums over a distributed total order — the
     scalable replacement for ``SUM(x) OVER (ORDER BY k ROWS UNBOUNDED
@@ -876,8 +870,12 @@ def prefix_sums(
     which also makes ROWS vs RANGE framing equivalent). ``sums`` maps
     source column name -> output column name; all run in ONE pass.
 
-    Plan: one driver-side boundary sample on the first sort column ->
-    bucket id as a pure key expression -> per-bucket running sums
+    Plan: one boundary sample on the first sort column (an in-plan
+    one-row broadcast; ``lazy_bounds=False`` collects it on the driver
+    at construction instead, which measures faster for callers that
+    persist the output and read it twice; explicit ``boundaries=`` or
+    ``bounds_frame=`` skip the sample) -> bucket id as a pure key
+    expression -> per-bucket running sums
     (window PARTITIONED by bucket — parallel) -> broadcast join of
     per-bucket prior totals (one row per bucket). Exact for ANY
     boundary placement: the bucket function is monotone in the sort
@@ -896,8 +894,7 @@ def prefix_sums(
     spec = _order_spec(order_cols)
     order = _sort_columns(spec)
     src = df.persist()
-    use_lazy = _LAZY_BOUNDS if lazy_bounds is None else lazy_bounds
-    if boundaries is None and bounds_frame is None and use_lazy:
+    if boundaries is None and bounds_frame is None and lazy_bounds:
         n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
         bounds_frame = _lazy_bounds_frame(src, spec[:1], n)
     tagged = _with_bucket(
@@ -974,7 +971,7 @@ def ntile_scalable(
     order = _sort_columns(spec)
     src = df.persist()
     bounds_frame = None
-    if boundaries is None and _LAZY_BOUNDS:
+    if boundaries is None:
         n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
         bounds_frame = _lazy_bounds_frame(src, spec[:1], n)
     tagged = _with_bucket(
@@ -1041,7 +1038,10 @@ def ntile_multi(
 
     Per axis the plan adds one bucket-partitioned row_number exchange
     and one broadcast offsets join — the same cost class as a single
-    :func:`ntile_scalable`, minus its persist + sampling job.
+    :func:`ntile_scalable`, minus its persist + sampling job. Every
+    axis's first sort column must be numeric, timestamp or date (the
+    fused sample is an in-plan ``percentile_approx``); others raise
+    ``ValueError``.
     """
     if buckets < 1:
         raise ValueError("buckets must be >= 1")
@@ -1050,31 +1050,23 @@ def ntile_multi(
     from harmonize_search_analyze_spark.functions.caching import tether
 
     specs = {out: _order_spec(spec) for out, spec in axes.items()}
-    src = df.persist()
-    bounds = None
-    bframe = None
-    if _LAZY_BOUNDS:
-        n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-        bframe = _lazy_bounds_frame(
-            src, [spec[0] for spec in specs.values()], n
-        )
+    n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
+    bframe = _lazy_bounds_frame(df, [spec[0] for spec in specs.values()], n)
     if bframe is None:
-        bounds = sample_boundaries(
-            src,
-            [spec[0] for spec in specs.values()],
-            num_partitions=num_partitions,
+        raise ValueError(
+            "ntile_multi needs numeric/timestamp/date first sort columns"
         )
+    src = df.persist()
 
     def _idiv(a, d):
         return ((a - a % d) / d).cast("bigint")
 
     out = src
     for out_col, spec in specs.items():
-        name, _asc = spec[0]
         pid_col = f"__pid_{out_col}"
         tagged = _with_bucket(
             src, spec, num_partitions, pid_col,
-            None if bframe is not None else bounds[name], bframe,
+            None, bframe,
         )
         woff = Window.orderBy(pid_col).rowsBetween(
             Window.unboundedPreceding, -1
@@ -1097,7 +1089,7 @@ def ntile_multi(
         wl = Window.partitionBy(pid_col).orderBy(*order)
         out = _with_bucket(
             out, spec, num_partitions, pid_col,
-            None if bframe is not None else bounds[name], bframe,
+            None, bframe,
         )
         out = (
             out.withColumn("__local", F.row_number().over(wl))
@@ -1148,7 +1140,7 @@ def prefix_max(
     order = _sort_columns(spec)
     src = df.persist()
     bounds_frame = None
-    if boundaries is None and _LAZY_BOUNDS:
+    if boundaries is None:
         n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
         bounds_frame = _lazy_bounds_frame(src, spec[:1], n)
     tagged = _with_bucket(

@@ -19,10 +19,6 @@ from pyspark.sql import functions as F
 
 from harmonize_search_analyze_spark.functions.hashing import hash64_sql
 
-#: llr_collocations margins as axis-partitioned window sums (round 11)
-#: — A/B-rig flag
-_LLR_WINDOW_MARGINS = True
-
 # -- tokenization ------------------------------------------------------------
 
 _WORD_RE = r"[a-z0-9]+"
@@ -2372,10 +2368,9 @@ def llr_collocations(
     (PMI is evidence-blind). Returns the ``top`` pairs by LLR DESC
     (w1, w2 ASC ties): ``(w1, w2, c12, r1, c2, llr)`` rounded 6.
 
-    Scale shape: identical to pmi_collocations — one persisted
-    tokenization pass, bigram counts from a slice zip, first/second
-    position margins aggregate FROM the bigram frame (vocab-sized),
-    two vocab joins + a 1-row broadcast.
+    Scale shape: one persisted tokenization pass, bigram counts from a
+    slice zip, first/second position margins as window sums over the
+    bigram frame (vocab-pair-sized), and a 1-row broadcast.
     """
     from harmonize_search_analyze_spark.functions.caching import tether
 
@@ -2412,7 +2407,8 @@ def llr_collocations(
     # Margins are sums of BIGINT counts — integer addition is order-free,
     # so values are bit-identical; the DuckDB oracle keeps the join form
     # (parity = equivalence proof). The bigram frame is vocab-pair-sized,
-    # so window partitions stay metadata at any corpus size.
+    # so window partitions stay metadata at any corpus size. The join
+    # form measured slower on 4 cores too (PERFORMANCE.md decision 9).
     nn = F.broadcast(bi.agg(F.sum("c12").cast("double").alias("__n")))
 
     def h(k, r, c):
@@ -2434,16 +2430,11 @@ def llr_collocations(
         + h(k21, F.col("__n") - rr, cc)
         + h(k22, F.col("__n") - rr, F.col("__n") - cc)
     )
-    if _LLR_WINDOW_MARGINS:
-        margined = bi.select(
-            "w1", "w2", "c12",
-            F.sum("c12").over(Window.partitionBy("w1")).alias("r1"),
-            F.sum("c12").over(Window.partitionBy("w2")).alias("c2"),
-        )
-    else:  # A/B-rig fallback: the pre-round join form
-        margined = bi.join(
-            bi.groupBy("w1").agg(F.sum("c12").alias("r1")), "w1"
-        ).join(bi.groupBy("w2").agg(F.sum("c12").alias("c2")), "w2")
+    margined = bi.select(
+        "w1", "w2", "c12",
+        F.sum("c12").over(Window.partitionBy("w1")).alias("r1"),
+        F.sum("c12").over(Window.partitionBy("w2")).alias("c2"),
+    )
     out = (
         margined.where(F.col("c12") >= min_count)
         .crossJoin(nn)

@@ -106,6 +106,23 @@ def test_duckdb_twin_exact_weights(corpus):
     assert duck == spark_side
 
 
+def test_checkpointed_grams_match_duckdb_twin(spark):
+    """The eagerly checkpointed gram frame feeds the fit and weight
+    passes; weights stay identical to the DuckDB twin on the same rows."""
+    docs = spark.createDataFrame(
+        [(i, f"alpha beta gamma doc{i} beta", i % 2 == 0)
+         for i in range(12)],
+        "doc_id LONG, text STRING, is_en BOOLEAN",
+    )
+    got = sorted(map(tuple, dsir_weights(docs, "is_en").collect()))
+    con = duckdb.connect()
+    con.register("dsir_bool_docs", docs.toPandas())
+    want = sorted(map(tuple, con.execute(
+        dsir_weights_sql("dsir_bool_docs", "is_en", "duckdb")
+    ).fetchall()))
+    assert got == want and len(got) == 12
+
+
 def test_validation():
     from harmonize_search_analyze_spark.operators.dsir import (
         dsir_bucket_ratios,

@@ -343,3 +343,90 @@ def test_scd2_merge_sql_matches_dataframe(spark):
         "2025-06-01", "duckdb",
     )).fetchall()
     assert sorted(tuple(r) for r in df) == sorted(tuple(r) for r in want)
+
+
+# -- in-plan boundary sampling (_lazy_bounds_frame) ---------------------------
+
+
+def _mk(spark, vals):
+    return spark.createDataFrame([(v,) for v in vals], "v DOUBLE")
+
+
+@pytest.mark.parametrize("asc", [True, False])
+def test_lazy_bucket_ids_match_eager(spark, asc):
+    """The in-plan bounds frame must reproduce the literal path's bucket
+    ids exactly: same percentile aggregate, same size(filter()) id, NULL
+    keys pinned identically (asc -> 0, desc -> len(bounds))."""
+    from harmonize_search_analyze_spark.operators import ordering as od
+
+    vals = [1.0, 1.0, 2.5, 3.0, 3.0, 3.0, 7.5, 9.0, None, 4.2, 0.5]
+    df = _mk(spark, vals)
+    spec = [("v", asc)]
+    eager_k, eager_bounds = od._bucket_boundaries(df, "v", asc, 4)
+    tagged_eager = od._with_bucket(df, spec, 4, "pid", eager_bounds)
+    bf = od._lazy_bounds_frame(df, spec, 4)
+    tagged_lazy = od._with_bucket(df, spec, 4, "pid", None, bf)
+
+    def key(frame):
+        return sorted(
+            ((r["v"], r["pid"]) for r in frame.collect()),
+            key=lambda t: (t[0] is None, t[0]),
+        )
+
+    assert key(tagged_eager) == key(tagged_lazy)
+    # lazy bucket ids are monotone in the sort order over non-null keys
+    nn = [p for v, p in key(tagged_lazy) if v is not None]
+    assert nn == sorted(nn) if asc else nn == sorted(nn, reverse=True)
+
+
+def test_lazy_bounds_empty_and_constant_input(spark):
+    from harmonize_search_analyze_spark.operators import ordering as od
+
+    empty = _mk(spark, [])
+    bf = od._lazy_bounds_frame(empty, [("v", True)], 4)
+    out = od._with_bucket(empty, [("v", True)], 4, "pid", None, bf)
+    assert out.count() == 0
+    const = _mk(spark, [5.0] * 6)
+    bf = od._lazy_bounds_frame(const, [("v", True)], 4)
+    out = od._with_bucket(const, [("v", True)], 4, "pid", None, bf)
+    assert {r["pid"] for r in out.collect()} == {0}
+
+
+def test_lazy_bounds_frame_none_for_strings(spark):
+    from harmonize_search_analyze_spark.operators import ordering as od
+
+    df = spark.createDataFrame([("a",), ("b",)], "v STRING")
+    assert od._lazy_bounds_frame(df, [("v", True)], 4) is None
+
+
+def test_ntile_multi_rejects_string_axis(spark):
+    from harmonize_search_analyze_spark.operators.ordering import ntile_multi
+
+    df = spark.createDataFrame([("a", 1), ("b", 2)], "s STRING, v INT")
+    with pytest.raises(ValueError, match="ntile_multi needs"):
+        ntile_multi(df, {"t": [("s", True)], "u": [("v", True)]}, 2)
+
+
+def test_prefix_sums_lazy_matches_eager(spark):
+    from harmonize_search_analyze_spark.operators.ordering import (
+        prefix_sums,
+        sample_boundaries,
+    )
+
+    per = (
+        _mk(spark, [3.0, 1.0, 2.0, 2.0, 9.0, 4.0, 4.0, 8.0])
+        .groupBy("v")
+        .agg(F.count(F.lit(1)).alias("c"))
+    )
+    lazy = {r["v"]: r["cum"]
+            for r in prefix_sums(per, ["v"], {"c": "cum"}).collect()}
+    eager = {r["v"]: r["cum"]
+             for r in prefix_sums(
+                 per, ["v"], {"c": "cum"}, lazy_bounds=False).collect()}
+    bounds = sample_boundaries(per, ["v"], num_partitions=4)["v"]
+    explicit = {r["v"]: r["cum"]
+                for r in prefix_sums(
+                    per, ["v"], {"c": "cum"}, boundaries=bounds).collect()}
+    assert lazy == eager == explicit
+    ordered = sorted(lazy)
+    assert [lazy[v] for v in ordered] == sorted(lazy[v] for v in ordered)

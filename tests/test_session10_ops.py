@@ -1179,6 +1179,29 @@ def test_llr_collocations_sql_twin_both_dialects(spark):
     assert [tuple(r) for r in duck] == want
 
 
+def test_llr_window_margins_match_join_form(spark):
+    """Window-sum margins over repeated documents against the DuckDB
+    twin, which keeps the margin-join form."""
+    from harmonize_search_analyze_spark.operators.text import (
+        llr_collocations,
+        llr_collocations_sql,
+    )
+
+    rows = [("the cat sat on the mat the cat ran",),
+            ("the dog sat on the cat mat dog dog",),
+            ("cat mat cat mat cat mat on the mat",)] * 3
+    docs = spark.createDataFrame(rows, "text STRING")
+    win = [tuple(r) for r in
+           llr_collocations(docs, "text", min_count=2, top=10).collect()]
+    con = duckdb.connect()
+    _duck(con, "s10_llr_rep", [f"('{t}')" for (t,) in rows], "text")
+    join = [tuple(r) for r in con.execute(
+        llr_collocations_sql("s10_llr_rep", "text", "duckdb",
+                             min_count=2, top=10)
+    ).fetchall()]
+    assert win == join and len(win) > 0
+
+
 # -- centroid_similarity --------------------------------------------------------
 
 

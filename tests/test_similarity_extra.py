@@ -552,3 +552,40 @@ def test_simplified_silhouette_single_centroid_refused(spark):
     )
     with pytest.raises(ValueError, match=">= 2 centroids"):
         simplified_silhouette(pts, "id", "v", cents)
+
+
+# -- similarity._small_frame (one-slice metadata frames) ---------------------
+
+
+def test_small_frame_one_slice_and_values(spark):
+    from harmonize_search_analyze_spark.operators import similarity as sm
+
+    rows = [(0, [1.0, 2.0]), (1, [3.0, 4.0]), (2, [5.0, 6.0])]
+    ddl = "centroid_id INT, cvec ARRAY<DOUBLE>"
+    one = sm._small_frame(spark, rows, ddl)
+    assert one.rdd.getNumPartitions() == 1
+    ref = spark.createDataFrame(rows, ddl)
+    assert sorted(map(tuple, one.collect())) == sorted(map(tuple, ref.collect()))
+    assert one.schema == ref.schema
+
+
+def test_small_frame_empty(spark):
+    from harmonize_search_analyze_spark.operators import similarity as sm
+
+    out = sm._small_frame(spark, [], "centroid_id INT, cvec ARRAY<DOUBLE>")
+    assert out.count() == 0
+    assert [f.name for f in out.schema.fields] == ["centroid_id", "cvec"]
+
+
+def test_kmeans_train_returns_one_slice_centroids(spark):
+    from harmonize_search_analyze_spark.operators.similarity import (
+        kmeans_train,
+    )
+
+    vecs = spark.createDataFrame(
+        [(i, [float(i % 4), float(i // 4)]) for i in range(16)],
+        "vec_id LONG, embedding ARRAY<DOUBLE>",
+    )
+    cents = kmeans_train(vecs, n_centroids=4, n_iters=2)
+    assert cents.rdd.getNumPartitions() == 1
+    assert cents.count() == 4
