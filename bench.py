@@ -224,10 +224,10 @@ def main() -> None:
                 best = elapsed
             if t > 0 and (worst is None or elapsed > worst):
                 worst = elapsed
-            # isolate trials/queries: release tether-managed persisted
-            # frames (their unpersist fires on Python GC, which is lazy)
-            # and drop any cached blocks so no run pays storage pressure
-            # from a predecessor
+            # isolate trials/queries: drop the result so the context
+            # cleaner can free the checkpoints its plan read, and drop any
+            # cached blocks so no run pays storage pressure from a
+            # predecessor
             del df
             gc.collect()
             spark.catalog.clearCache()

@@ -1,123 +1,67 @@
-"""Lifecycle management for persisted intermediate frames.
+"""Storage for intermediates that an operator's lazy plan reads more than once.
 
-Several operators persist a small intermediate (LSH band frames, SimHash
-sketches, a dashboard's filtered input) that is referenced by more than one
-branch of the returned lazy plan — without the persist Spark recomputes the
-branch per consumer (no CSE across join sides). The returned DataFrame is
-lazy, so the operator cannot unpersist before returning; round-1 review
-flagged the resulting leak in long-lived sessions.
-
-``tether(out, *persisted)`` ties each intermediate's storage lifetime to the
-*returned* frame: when the caller drops the result (or it is garbage
-collected), the intermediates unpersist automatically. ``release(out)``
-unpersists them eagerly once the caller has materialized what it needs.
-Both are idempotent; ``unpersist`` on an already-free frame is a no-op.
+``checkpoint(df)`` is a lazy ``localCheckpoint``: the first action that reads
+it fills it, and it lives while any plan reads it, frames derived from the
+operator's result included. Spark's ``ContextCleaner`` frees it seconds after
+the JVM collects the last such plan; ``release``/``scoped`` free it eagerly.
+Like the engine's loop checkpoints, it does not survive the loss of the
+executor that holds it.
 """
 
 from __future__ import annotations
 
 import contextlib
-import weakref
-from typing import Iterable, Iterator
 
 from pyspark.sql import DataFrame
 
-# finalizers registered per returned frame, so release() can run them early.
-# WeakKeyDictionary: entries vanish with the returned frame; the finalizers
-# themselves still fire at GC via weakref.finalize's own machinery.
-_FINALIZERS: "weakref.WeakKeyDictionary[DataFrame, list[weakref.finalize]]" = (
-    weakref.WeakKeyDictionary()
-)
+_MADE: dict[int, list[int]] = {}  # checkpoint RDD id -> engine ones it read
 
 
-def _safe_unpersist(df: DataFrame) -> None:
-    try:
-        df.unpersist()
-    except Exception:
-        # session already stopped / executor gone — nothing left to free
-        pass
+def _rdd_ids(df: DataFrame) -> list[int]:
+    it = df._jdf.queryExecution().logical().collectLeaves().iterator()
+    leaves = (it.next() for _ in iter(it.hasNext, False))
+    return [lf.rdd().id() for lf in leaves
+            if lf.getClass().getSimpleName() == "LogicalRDD"]
 
 
-def tether(out: DataFrame, *persisted: DataFrame) -> DataFrame:
-    """Unpersist each frame in ``persisted`` when ``out`` is dropped."""
-    fins = _FINALIZERS.setdefault(out, [])
-    for p in persisted:
-        fins.append(weakref.finalize(out, _safe_unpersist, p))
+def checkpoint(df: DataFrame) -> DataFrame:
+    out = df.localCheckpoint(eager=False)
+    _MADE[_rdd_ids(out)[0]] = [i for i in _rdd_ids(df) if i in _MADE]
     return out
 
 
-class _SharedHandle:
-    """Refcounted unpersist: frees the frame when every tethered consumer
-    has been released or garbage collected."""
-
-    __slots__ = ("frame", "remaining")
-
-    def __init__(self, frame: DataFrame, n: int) -> None:
-        self.frame = frame
-        self.remaining = n
-
-    def dec(self) -> None:
-        self.remaining -= 1
-        if self.remaining == 0:
-            _safe_unpersist(self.frame)
-
-
-def tether_shared(outs: list[DataFrame], persisted: DataFrame) -> list[DataFrame]:
-    """Unpersist ``persisted`` once ALL frames in ``outs`` are dropped —
-    for operators like dashboard() where several returned panels share one
-    cached input."""
-    handle = _SharedHandle(persisted, len(outs))
-    for o in outs:
-        _FINALIZERS.setdefault(o, []).append(weakref.finalize(o, handle.dec))
-    return outs
-
-
-def transfer(src: DataFrame, dst: DataFrame) -> DataFrame:
-    """Move ``src``'s tethered intermediates to ``dst``. Needed when an
-    operator derives a new frame from a tethered one and drops the original:
-    without the transfer, the original's GC would unpersist the intermediate
-    before the derived frame's first action (correct but recomputes)."""
-    for fin in _FINALIZERS.pop(src, []):
-        info = fin.detach()
-        if info is not None:
-            _, func, args, kwargs = info
-            _FINALIZERS.setdefault(dst, []).append(
-                weakref.finalize(dst, func, *args, **kwargs)
-            )
-    return dst
-
-
 def release(out: DataFrame) -> None:
-    """Eagerly unpersist the intermediates tethered to ``out``. Safe to call
-    whether or not ``out`` has tethered frames, and safe to call twice."""
-    for fin in _FINALIZERS.pop(out, []):
-        fin()  # runs _safe_unpersist once and detaches
+    """Unpersist now the engine checkpoints ``out``'s plan reads and those
+    they were built from, never a caller's own; idempotent. A local
+    checkpoint cannot be recomputed: frames that share these intermediates
+    must not be collected afterwards."""
+    if not _MADE:
+        return
+    rdds = out.sparkSession.sparkContext._jsc.getPersistentRDDs()
+    todo = _rdd_ids(out)
+    while todo:
+        i = todo.pop()
+        nested = _MADE.pop(i, None)
+        if nested is not None:
+            todo += nested
+            if rdds.containsKey(i):
+                rdds.get(i).unpersist(False)
+    for i in _MADE.keys() - set(rdds.keySet().toArray()):
+        _MADE.pop(i, None)  # already freed by the ContextCleaner
 
 
-def persisted_count(spark) -> int:
-    """Number of persisted RDD blocks the context is still tracking —
-    assertable in tests (round-1 verdict item 7)."""
-    return spark.sparkContext._jsc.getPersistentRDDs().size()
-
-
-def release_all(frames: Iterable[DataFrame]) -> None:
+def release_all(frames) -> None:
     for f in frames:
         release(f)
 
 
 @contextlib.contextmanager
-def scoped(out: DataFrame) -> Iterator[DataFrame]:
-    """Deterministic storage scope for a tethered operator result:
-
-    >>> with scoped(simhash_near_dup_pairs_banded(df, "id", "text")) as pairs:
-    ...     pairs.write.parquet(...)
-
-    The tethered intermediates are unpersisted at block exit — no reliance
-    on when (or whether) the garbage collector runs, which in a long-lived
-    driver session under memory pressure can let persisted band/sketch
-    frames accrete until an arbitrary collection. The GC tether remains
-    the fallback for callers who don't scope."""
+def scoped(out: DataFrame):
     try:
         yield out
     finally:
         release(out)
+
+
+def persisted_count(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()

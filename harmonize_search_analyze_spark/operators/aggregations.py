@@ -29,7 +29,7 @@ import math
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from harmonize_search_analyze_spark.functions.caching import tether_shared
+from harmonize_search_analyze_spark.functions.caching import checkpoint
 from harmonize_search_analyze_spark.sources.tables import local_frame
 from harmonize_search_analyze_spark.functions.datemath import (
     is_date_math,
@@ -208,7 +208,7 @@ def nested_terms(
     top ``inner_k`` inner buckets.
 
     Single shuffle of the base table on (outer, inner) — the pair-count
-    frame persists across its two consumers, so the base is SCANNED
+    frame is checkpointed for its two consumers, so the base is SCANNED
     ONCE. Outer totals are a second partial agg over the pair counts
     (cheap: |pairs| rows, not |df|), and the outer top-k is a
     TakeOrderedAndProject (``orderBy().limit()``) over that
@@ -220,13 +220,10 @@ def nested_terms(
     left is the inner ranking, partitioned by outer. Tie order pinned
     (count DESC, key ASC) at both levels.
     """
-    from harmonize_search_analyze_spark.functions.caching import tether
-
-    pair = (
+    pair = checkpoint(
         df.where(F.col(outer).isNotNull() & F.col(inner).isNotNull())
         .groupBy(outer, inner)
         .agg(F.count(F.lit(1)).alias("doc_count"))
-        .persist()
     )
     top_outer = (
         pair.groupBy(outer)
@@ -242,7 +239,7 @@ def nested_terms(
         .select(outer, inner, "doc_count", "outer_count")
         .orderBy(F.desc("outer_count"), F.asc(outer), F.desc("doc_count"), F.asc(inner))
     )
-    return tether(out, pair)
+    return out
 
 
 def histogram(
@@ -2148,10 +2145,10 @@ def dashboard(
     applied once), then each panel aggregates the same frame.
 
     ``panels`` maps name -> fn(DataFrame) -> DataFrame. The filtered frame is
-    cached when more than one panel will reuse it (the reference gets this
-    "for free" by ES query caching; in Spark we must ask for it). The cache
-    is refcount-tethered to the returned panels: it unpersists once every
-    panel frame is released/GC'd (caching.release for eager cleanup).
+    checkpointed when more than one panel will reuse it (the reference gets
+    this "for free" by ES query caching; in Spark we must ask for it). It
+    lives while any panel's plan reads it (``caching.release`` frees it
+    eagerly).
 
     ``global_panels`` implements ES's ``global`` aggregation: those panels
     evaluate against the UNFILTERED frame — the "3 of 120 incidents match"
@@ -2168,9 +2165,8 @@ def dashboard(
         kql_default_fields=kql_default_fields,
     )
     if cache and len(panels) > 1:
-        filtered = filtered.cache()
+        filtered = checkpoint(filtered)
         out = {name: fn(filtered) for name, fn in panels.items()}
-        tether_shared(list(out.values()), filtered)
     else:
         out = {name: fn(filtered) for name, fn in panels.items()}
     for name, fn in (global_panels or {}).items():
@@ -3186,12 +3182,11 @@ def kmv_overlap(
         )
 
     # each k-row sketch feeds 2 consumers (stats agg + membership join),
-    # the union sketch 2 — persist all three, tethered to the result
-    sa = sketch(df_a).persist()
-    sb = sketch(df_b).persist()
-    su = (
-        sa.unionAll(sb).distinct().orderBy("h").limit(k).persist()
-    )
+    # the union sketch 2; re-running the top-k sketches measured faster
+    # than checkpointing them (PERFORMANCE.md decision 10)
+    sa = sketch(df_a)
+    sb = sketch(df_b)
+    su = sa.unionAll(sb).distinct().orderBy("h").limit(k)
     stats = (
         sa.agg(F.count(F.lit(1)).alias("na"), F.max("h").alias("tha"))
         .crossJoin(
@@ -3228,9 +3223,7 @@ def kmv_overlap(
         F.round(jac, 6).alias("jaccard"),
         F.round(jac * est("nu", "thu"), 4).alias("est_intersection"),
     )
-    from harmonize_search_analyze_spark.functions.caching import tether
-
-    return tether(out, sa, sb, su)
+    return out
 
 
 def kmv_overlap_sql(
@@ -3317,7 +3310,6 @@ def join_size_estimate(
     sketch (map-side heaps); everything downstream is <= k-row frames
     and 1-row crossJoins. Never touches A x B.
     """
-    from harmonize_search_analyze_spark.functions.caching import tether
     from harmonize_search_analyze_spark.functions.hashing import (
         hash64_sql,
     )
@@ -3336,9 +3328,9 @@ def join_size_estimate(
             .limit(k)
         )
 
-    sa = sketch(df_a).persist()
-    sb = sketch(df_b).persist()
-    su = sa.unionAll(sb).distinct().orderBy("h").limit(k).persist()
+    sa = sketch(df_a)  # not stored, as in kmv_overlap
+    sb = sketch(df_b)
+    su = sa.unionAll(sb).distinct().orderBy("h").limit(k)
     stats = (
         df_a.where(F.col(key).isNotNull())
         .agg(F.count(F.lit(1)).alias("ra"))
@@ -3388,7 +3380,7 @@ def join_size_estimate(
         F.round(overlap, 4).alias("est_key_overlap"),
         F.round(join_rows, 2).alias("est_join_rows"),
     )
-    return tether(out, sa, sb, su)
+    return out
 
 
 def join_size_estimate_sql(
@@ -4118,14 +4110,13 @@ def source_overlap_matrix(
     two60 = 1152921504606846976.0
     h = hash64_sql(f"CAST({field} AS STRING)", "spark")
     wk = Window.partitionBy("__g").orderBy("h")
-    sk = (
+    sk = checkpoint(
         df.where(F.col(field).isNotNull() & F.col(group_col).isNotNull())
         .select(F.col(group_col).alias("__g"), F.expr(h).alias("h"))
         .distinct()
         .withColumn("__rn", F.row_number().over(wk))
         .where(F.col("__rn") <= k)
         .drop("__rn")
-        .persist()
     )
     groups = sk.select("__g").distinct()
     spine = (
@@ -4165,8 +4156,6 @@ def source_overlap_matrix(
     jac = F.when(F.col("__nu") == 0, F.lit(0.0)).otherwise(
         F.col("__c_both") / F.col("__nu").cast("double")
     )
-    from harmonize_search_analyze_spark.functions.caching import tether
-
     out = stats.select(
         "source_a", "source_b",
         F.col("__nu").cast("bigint").alias("sketch_union"),
@@ -4174,7 +4163,7 @@ def source_overlap_matrix(
         F.round(jac, 6).alias("jaccard"),
         F.round(jac * est_u, 4).alias("est_intersection"),
     ).orderBy("source_a", "source_b")
-    return tether(out, sk)
+    return out
 
 
 def source_overlap_matrix_sql(
@@ -4286,12 +4275,11 @@ def geo_hotspots(
     from harmonize_search_analyze_spark.functions.geohash import hex_qr_sql
 
     qs, rs = hex_qr_sql(lat, lon, size_deg)
-    cells = (
+    cells = checkpoint(
         df.groupBy(
             F.expr(qs).alias("__q"), F.expr(rs).alias("__r")
         )
         .agg(F.count(F.lit(1)).alias("__x"))
-        .persist()
     )
     stats = cells.agg(
         F.count(F.lit(1)).alias("__n"),
@@ -4333,8 +4321,6 @@ def geo_hotspots(
     z = F.try_divide(
         F.col("__hood") - F.lit(w) * F.col("__mean"), denom
     )
-    from harmonize_search_analyze_spark.functions.caching import tether
-
     out = (
         joined.select(
             F.concat_ws(
@@ -4348,7 +4334,7 @@ def geo_hotspots(
         .orderBy(F.desc("gi_z"), F.asc("hex"))
         .limit(k)
     )
-    return tether(out, cells)
+    return out
 
 
 def geo_hotspots_sql(
@@ -4436,7 +4422,6 @@ def weighted_percentile(
         raise ValueError("probs must be non-empty")
     if any(not 0.0 < p <= 1.0 for p in probs):
         raise ValueError("probs must be in (0, 1]")
-    from harmonize_search_analyze_spark.functions.caching import tether
     from harmonize_search_analyze_spark.operators.ordering import (
         prefix_sums,
     )
@@ -4448,13 +4433,13 @@ def weighted_percentile(
         .groupBy(v.alias("__v"))
         .agg(F.sum(w).alias("__w"))
     )
-    # lazy_bounds=False: persisted-output shape — the eager boundary
+    # lazy_bounds=False: stored-output shape — the eager boundary
     # sample pre-fills the cache and measured faster (4 cores, sf0.1,
     # 20 alternating trials: median 0.458 vs 0.488 s lazy; PERFORMANCE.md
     # decision 9; see lorenz_gini's note)
-    cum = prefix_sums(
+    cum = checkpoint(prefix_sums(
         per, ["__v"], {"__w": "__cw"}, lazy_bounds=False
-    ).persist()
+    ))
     tot = cum.agg(F.max("__cw").alias("__tot"))
     hit = cum.crossJoin(F.broadcast(tot)).agg(
         F.max("__tot").alias("__tot"),
@@ -4488,7 +4473,7 @@ def weighted_percentile(
         )
         .orderBy("p")
     )
-    return tether(out, cum)
+    return out
 
 
 def weighted_percentile_sql(

@@ -30,6 +30,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from harmonize_search_analyze_spark.functions.caching import checkpoint
 from harmonize_search_analyze_spark.sources.tables import local_frame
 
 
@@ -383,7 +384,7 @@ def eql_sequence(
             "__nidu",
             F.last(F.when(F.col("__su"), F.col("__id")), True).over(w),
         )
-    ev = ev.cache() if n > 2 else ev
+    ev = checkpoint(ev) if n > 2 else ev
     seq = ev.where("__s1").select(
         by,
         F.col("__t").alias("t1"),
@@ -684,7 +685,6 @@ def ks_drift(
     (:func:`ordering.prefix_sums` — corpus-sized on continuous values,
     so never an unpartitioned window); the max is a 1-row reduce. Raw
     data is scanned once."""
-    from harmonize_search_analyze_spark.functions.caching import transfer
     from harmonize_search_analyze_spark.operators.ordering import (
         prefix_sums,
     )
@@ -699,10 +699,11 @@ def ks_drift(
             F.count(F.when(b, 1)).alias("cb"),
         )
     )
-    tot = per.agg(
-        F.sum("ca").alias("na"), F.sum("cb").alias("nb")
-    )
     cum = prefix_sums(per, ["v"], {"ca": "__fa", "cb": "__fb"})
+    # counts are >= 0, so the totals are the largest running sums: read
+    # them off prefix_sums' checkpoint instead of scanning the raw rows
+    # a second time
+    tot = cum.agg(F.max("__fa").alias("na"), F.max("__fb").alias("nb"))
     gap = F.abs(
         F.try_divide(F.col("__fa"), F.col("na"))
         - F.try_divide(F.col("__fb"), F.col("nb"))
@@ -717,9 +718,7 @@ def ks_drift(
         F.round("g", 6).alias("ks_stat"),
         F.col("v").alias("ks_at"),
     )
-    # dropping cum at return would unpersist its tethered input before
-    # the caller's action (a second scan of the raw rows)
-    return transfer(cum, out)
+    return out
 
 
 def chi2_independence(
@@ -824,7 +823,7 @@ def rfm_segments(
         ntile_multi,
     )
 
-    # one persist + one fused boundary pass + one bucket exchange per
+    # one checkpoint + one fused boundary pass + one bucket exchange per
     # axis — every axis's bucket id is a pure projection of the user
     # frame, so the offsets never chain through the window stages
     tiled = ntile_multi(
@@ -1596,17 +1595,14 @@ def cohens_kappa(
     marginals and the kappa arithmetic over that tiny frame — the
     corpus is scanned once.
     """
-    from harmonize_search_analyze_spark.functions.caching import tether
-
     # the category-pair-sized count frame feeds FOUR consumers (n, p_o,
-    # both marginals) — persist it or the corpus agg replays per branch
-    pairs = (
+    # both marginals) — checkpoint it or the corpus agg replays per branch
+    pairs = checkpoint(
         df.where(F.col(rater_a).isNotNull() & F.col(rater_b).isNotNull())
         .groupBy(
             F.col(rater_a).alias("__a"), F.col(rater_b).alias("__b")
         )
         .agg(F.count(F.lit(1)).alias("__c"))
-        .persist()
     )
     n = pairs.agg(F.sum("__c").alias("__n"))
     po = pairs.where(F.col("__a") == F.col("__b")).agg(
@@ -1647,7 +1643,7 @@ def cohens_kappa(
             ).alias("kappa"),
         )
     )
-    return tether(out, pairs)
+    return out
 
 
 def cohens_kappa_sql(
@@ -1806,20 +1802,17 @@ def mutual_info(
     either entropy is 0 — a constant column shares no information,
     pinned). NULL in either column drops the row (matching
     chi2_independence). One (a, b) pair-count scan; marginals and the
-    sum run over the persisted category-pair frame (same shape as
+    sum run over the checkpointed category-pair frame (same shape as
     cohens_kappa). Returns ``(n, mi_bits, h_a, h_b, nmi)`` rounded 6.
     """
-    from harmonize_search_analyze_spark.functions.caching import tether
-
-    pairs = (
+    pairs = checkpoint(
         df.where(F.col(col_a).isNotNull() & F.col(col_b).isNotNull())
         .groupBy(F.col(col_a).alias("__a"), F.col(col_b).alias("__b"))
         .agg(F.count(F.lit(1)).alias("__c"))
-        .persist()
     )
     # Round-11 (the ipf_weights r10 pattern — margin joins -> window
     # aggregates, guide §2.1/§3): the old shape ran SEVEN broadcast-agg
-    # subtrees over the persisted pair frame (n, ma, mb, mi, ha, hb +
+    # subtrees over the stored pair frame (n, ma, mb, mi, ha, hb +
     # the final crossJoin chain) — profiled 30 jobs / 20 s of
     # mostly-blocked task runtime for a ~30-row pair frame. Marginals
     # are now window sums partitioned by each axis; the entropies
@@ -1881,7 +1874,7 @@ def mutual_info(
             6,
         ).alias("nmi"),
     )
-    return tether(out, pairs)
+    return out
 
 
 def mutual_info_sql(table: str, col_a: str, col_b: str, dialect: str) -> str:
@@ -2310,12 +2303,10 @@ def calibration(
     """
     if bins < 2:
         raise ValueError("bins must be >= 2")
-    from harmonize_search_analyze_spark.functions.caching import tether
-
     p = F.expr(prob_expr).cast("double")
     y = F.expr(label_expr).cast("double")
     b = F.least(F.floor(p * bins), F.lit(bins - 1)).cast("int")
-    per_bin = (
+    per_bin = checkpoint(
         df.where(p.isNotNull() & y.isNotNull() & (p >= 0) & (p <= 1))
         .groupBy(b.alias("bin"))
         .agg(
@@ -2324,7 +2315,6 @@ def calibration(
             F.avg(y).alias("__acc"),
             F.sum((p - y) * (p - y)).alias("__sq"),
         )
-        .persist()
     )
     totals = per_bin.agg(
         F.sum("__n").alias("__tot"),
@@ -2348,7 +2338,7 @@ def calibration(
         )
         .orderBy("bin")
     )
-    return tether(out, per_bin)
+    return out
 
 
 def calibration_sql(
@@ -2601,18 +2591,14 @@ def acf_series(
     """
     if max_lag < 1:
         raise ValueError("max_lag must be >= 1")
-    from harmonize_search_analyze_spark.functions.caching import tether
-
     spark = buckets.sparkSession
     v = F.col(value_col).cast("double")
     # the indexed series feeds four consumers (mean, ss, both join
-    # sides) — persist or the upstream bucket agg replays per branch
-    idx = (
-        buckets.select(
-            F.row_number().over(Window.orderBy(bucket_col)).alias("__i"),
-            v.alias("__v"),
-        )
-        .persist()
+    # sides); they share the window's exchange, and the unstored plan
+    # measured faster than a checkpoint (PERFORMANCE.md decision 10)
+    idx = buckets.select(
+        F.row_number().over(Window.orderBy(bucket_col)).alias("__i"),
+        v.alias("__v"),
     )
     mu_row = idx.agg(F.avg("__v").alias("__mu"))
     stats = (
@@ -2654,7 +2640,7 @@ def acf_series(
         )
         .orderBy("lag")
     )
-    return tether(out, idx)
+    return out
 
 
 def acf_series_sql(
@@ -2714,17 +2700,14 @@ def confusion_eval(
     NULL recall; F1 is NULL unless both are defined and nonzero-summed.
 
     Scale shape: ONE (truth, pred) pair-count scan; everything after is
-    class-pair-sized (same shape as cohens_kappa, persisted for its
+    class-pair-sized (same shape as cohens_kappa, checkpointed for its
     consumers).
     """
-    from harmonize_search_analyze_spark.functions.caching import tether
-
     t, p = F.expr(truth_expr), F.expr(pred_expr)
-    pairs = (
+    pairs = checkpoint(
         df.where(t.isNotNull() & p.isNotNull())
         .groupBy(t.alias("__t"), p.alias("__p"))
         .agg(F.count(F.lit(1)).alias("__c"))
-        .persist()
     )
     classes = (
         pairs.select(F.col("__t").alias("class"))
@@ -2740,7 +2723,7 @@ def confusion_eval(
     preds = pairs.groupBy(F.col("__p").alias("class")).agg(
         F.sum("__c").alias("__pred")
     )
-    per_class = (
+    per_class = checkpoint(
         classes.join(tp, "class", "left")
         .join(truths, "class", "left")
         .join(preds, "class", "left")
@@ -2765,7 +2748,6 @@ def confusion_eval(
                 F.col("__prec") + F.col("__rec"),
             ),
         )
-        .persist()
     )
     overall = per_class.crossJoin(
         F.broadcast(
@@ -2788,7 +2770,7 @@ def confusion_eval(
         F.round(F.col("__agree") / F.col("__n"), 6).alias("accuracy"),
         F.round("__macro", 6).alias("macro_f1"),
     ).orderBy("class")
-    return tether(out, pairs, per_class)
+    return out
 
 
 def confusion_eval_sql(
@@ -3060,7 +3042,6 @@ def spearman_corr(
     value-equi-join (two joins keyed on values, co-partitioned with the
     row scan) and one CORR agg. Never a corpus-wide rank window.
     """
-    from harmonize_search_analyze_spark.functions.caching import tether
     from harmonize_search_analyze_spark.operators.ordering import (
         _lazy_bounds_frame,
         prefix_sums,
@@ -3068,12 +3049,12 @@ def spearman_corr(
 
     x = F.expr(x_expr).cast("double")
     y = F.expr(y_expr).cast("double")
-    # persisted: base feeds BOTH value-count frames, the boundary
-    # sample, and the final rank join — four consumers, one corpus scan
+    # base feeds BOTH value-count frames, the boundary sample and the
+    # final rank join; a checkpoint of this scan-and-project measured
+    # slower than re-reading it (PERFORMANCE.md decision 10)
     base = (
         df.where(x.isNotNull() & y.isNotNull())
         .select(x.alias("__x"), y.alias("__y"))
-        .persist()
     )
     # ONE fused percentile_approx pass samples both axes' bucket
     # boundaries (quantiles of the raw rows bucket the distinct-value
@@ -3098,10 +3079,7 @@ def spearman_corr(
             ).alias(f"__r{col[-1]}"),
         )
 
-    ranked = tether(
-        base.join(_ranks("__x"), "__x").join(_ranks("__y"), "__y"),
-        base,
-    )
+    ranked = base.join(_ranks("__x"), "__x").join(_ranks("__y"), "__y")
     # covar/stddev form, not F.corr: Spark 4's ANSI-mode corr THROWS
     # DIVIDE_BY_ZERO on a constant column where DuckDB's CORR returns
     # NULL — try_divide restores the shared NULL-on-undefined contract
@@ -3182,14 +3160,12 @@ def markov_stationary(
     """
     if iters < 1:
         raise ValueError("iters must be >= 1")
-    from harmonize_search_analyze_spark.functions.caching import tether
-
     w = (
         Window.partitionBy(user_col)
         .orderBy(F.col(ts_col), F.col(id_col))
     )
     nxt = F.lead(event_col).over(w)
-    pairs = (
+    pairs = checkpoint(
         df.where(F.col(event_col).isNotNull() & F.col(ts_col).isNotNull())
         .select(
             F.col(event_col).alias("__from"), nxt.alias("__to")
@@ -3197,17 +3173,15 @@ def markov_stationary(
         .where(F.col("__to").isNotNull())
         .groupBy("__from", "__to")
         .agg(F.count(F.lit(1)).alias("__c"))
-        .persist()
     )
-    states = (
+    states = checkpoint(
         pairs.select(F.col("__from").alias("__s"))
         .unionByName(pairs.select(F.col("__to").alias("__s")))
         .distinct()
-        .persist()
     )
     outs = pairs.groupBy("__from").agg(F.sum("__c").alias("__out"))
     # row-stochastic P with self-loops for sink states
-    p = (
+    p = checkpoint(
         states.join(outs, states["__s"] == outs["__from"], "left")
         .select(
             "__s",
@@ -3226,7 +3200,6 @@ def markov_stationary(
                 F.col("__c") / F.col("__out").cast("double"),
             ).otherwise(F.lit(1.0)).alias("__p"),
         )
-        .persist()
     )
     # 1/n as a 1-row broadcast instead of a driver count() action
     # (round 11): lit(1.0)/BIGINT column is the same IEEE division the
@@ -3268,7 +3241,7 @@ def markov_stationary(
         )
         .orderBy("state")
     )
-    return tether(out, pairs, states, p)
+    return out
 
 
 def markov_stationary_sql(
@@ -4752,9 +4725,7 @@ def stl_decompose(
     detr = trended.withColumn("__slot", slot).withColumn(
         "__d", F.col("__v") - F.col("__t")
     )
-    from harmonize_search_analyze_spark.functions.caching import tether
-
-    detr = detr.persist()
+    detr = checkpoint(detr)
     slots = detr.groupBy("__slot").agg(F.avg("__d").alias("__s_raw"))
     wall = Window.partitionBy()
     slots = slots.withColumn(
@@ -4782,7 +4753,7 @@ def stl_decompose(
         )
         .orderBy("day")
     )
-    return tether(out, detr)
+    return out
 
 
 def stl_decompose_sql(
@@ -4873,7 +4844,6 @@ def lorenz_gini(
     """
     if points < 2:
         raise ValueError("points must be >= 2")
-    from harmonize_search_analyze_spark.functions.caching import tether
     from harmonize_search_analyze_spark.operators.ordering import (
         prefix_sums,
     )
@@ -4887,17 +4857,17 @@ def lorenz_gini(
             F.sum(v).alias("__m"),
         )
     )
-    # lazy_bounds=False: cum is PERSISTED with two consumers; the
+    # lazy_bounds=False: cum is CHECKPOINTED with two consumers; the
     # in-plan boundary broadcast measured SLOWER here (4 cores, sf0.1,
     # 20 alternating trials: median 0.489 s eager vs 0.532 s lazy;
     # PERFORMANCE.md decision 9) — the eager construct-time sample
-    # pre-fills the persist cache before the consumers race, which wins
-    # when the prefix frame is cached. weighted_percentile (same
-    # persisted-output shape) measured the same way; the rest of the
+    # pre-fills the stored frame before the consumers race, which wins
+    # when the prefix frame is stored. weighted_percentile (same
+    # stored-output shape) measured the same way; the rest of the
     # rank battery keeps the lazy default.
-    cum = prefix_sums(
+    cum = checkpoint(prefix_sums(
         per, ["__v"], {"__c": "__cc", "__m": "__cm"}, lazy_bounds=False
-    ).persist()
+    ))
     tot = cum.agg(
         F.max("__cc").alias("__n"), F.max("__cm").alias("__w")
     )
@@ -4962,7 +4932,7 @@ def lorenz_gini(
         )
         .orderBy("p")
     )
-    return tether(out, cum)
+    return out
 
 
 def lorenz_gini_sql(
@@ -5052,9 +5022,7 @@ def theil_sen(
             F.datediff(F.col("__d"), F.lit("1970-01-01")).cast("double"),
         )
     )
-    from harmonize_search_analyze_spark.functions.caching import tether
-
-    days = days.persist()
+    days = checkpoint(days)
     a = days.select(
         F.col("__x").alias("__xa"), F.col("__y").alias("__ya")
     )
@@ -5084,7 +5052,7 @@ def theil_sen(
         F.round("__b", 6).alias("intercept"),
         F.round("__ols", 6).alias("ols_slope"),
     )
-    return tether(out, days)
+    return out
 
 
 def theil_sen_sql(

@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from harmonize_search_analyze_spark.functions.caching import checkpoint
 from harmonize_search_analyze_spark.operators.dedup import (
     band_join,
     jaccard_sql,
@@ -569,20 +570,20 @@ def ngram_novelty(
     )
 
     # both gram frames feed two consumers each (ref: bloom build +
-    # verify semi-join; doc: probe + totals) — persist or the explode+
+    # verify semi-join; doc: probe + totals) — checkpoint or the explode+
     # distinct replays per reader
-    ref_grams = reference.select(
+    ref_grams = checkpoint(reference.select(
         F.explode(F.expr(shingles_sql(text_col, "spark", n)))
         .alias("gram")
-    ).distinct().persist()
-    words = bloom_build(
+    ).distinct())
+    words = checkpoint(bloom_build(
         ref_grams, "gram", m_bits=m_bits, k=k, seed=seed
-    ).persist()
-    doc_grams = docs.select(
+    ))
+    doc_grams = checkpoint(docs.select(
         F.col(id_col),
         F.explode(F.expr(shingles_sql(text_col, "spark", n)))
         .alias("gram"),
-    ).distinct().persist()
+    ).distinct())
     flagged = bloom_flag_maybe(
         doc_grams, words, "gram", m_bits=m_bits, k=k, seed=seed
     )
@@ -615,9 +616,7 @@ def ngram_novelty(
         )
         .orderBy(id_col)
     )
-    from harmonize_search_analyze_spark.functions.caching import tether
-
-    return tether(out, words, ref_grams, doc_grams)
+    return out
 
 
 def ngram_novelty_sql(

@@ -28,7 +28,10 @@ import uuid
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from harmonize_search_analyze_spark.functions.caching import tether, transfer
+from harmonize_search_analyze_spark.functions.caching import (
+    checkpoint,
+    release,
+)
 from harmonize_search_analyze_spark.functions.hashing import (
     hash64_sql,
     hash_full64_sql,
@@ -230,24 +233,22 @@ def band_join(left: DataFrame, right: DataFrame | None = None) -> DataFrame:
     two :func:`band_frame` outputs — the equi-join on (band_idx, band_key)
     that is the LSH candidate stage, shuffle-friendly on a short key.
 
-    With no ``right`` it is the self-join, keeping ``id1 < id2``: the band
-    frame is persisted (Spark does not CSE across join branches, so both
-    sides would otherwise re-run the signature build; the frame is
-    n_docs x n_bands rows) and unpersists when the result, or anything it
-    is ``transfer()``-ed to, is dropped. With a ``right`` it is the plain
+    With no ``right`` it is the self-join, keeping ``id1 < id2``; both
+    sides read the same signature exchange, which Spark reuses, so the
+    band frame is not stored (a checkpoint measured slower,
+    PERFORMANCE.md decision 10). With a ``right`` it is the plain
     cross-corpus join: no id predicate (the two id spaces are unrelated)
-    and nothing persisted — pass ``F.broadcast(right)`` for an MB-sized
-    side."""
+    — pass ``F.broadcast(right)`` for an MB-sized side."""
     self_join = right is None
     if self_join:
-        left = right = left.persist()
+        right = left
     pairs = left.toDF("id1", "band_idx", "band_key").join(
         right.toDF("id2", "band_idx", "band_key"), ["band_idx", "band_key"]
     )
     if self_join:
         pairs = pairs.where(F.col("id1") < F.col("id2"))
     out = pairs.select("id1", "id2").distinct()
-    return tether(out, left) if self_join else out
+    return out
 
 
 def minhash_bands(
@@ -299,16 +300,16 @@ def near_dup_pairs_lsh(
     # parquet input would otherwise run the whole signature pipeline (and
     # both verify-join probes) in one task
     df = df.repartition(df.sparkSession.sparkContext.defaultParallelism, id_col)
-    # ONE tokenization pass for the whole pipeline: the persisted shingle
-    # frame feeds the signature build AND both verify-join probes (three
-    # readers; without it the tokenize+shingle projection runs per reader
-    # — no CSE across join branches). Signatures from the distinct set
-    # are byte-identical to the raw-gram-stream path (MIN is duplicate-
-    # invariant; pinned by test).
+    # the shingle frame feeds the signature build AND both verify-join
+    # probes; all three read the one repartition exchange above, and
+    # re-running the shingle projection per reader measured faster than
+    # a checkpoint that serializes the pipeline (PERFORMANCE.md decision
+    # 10). Signatures from the distinct set are byte-identical to the
+    # raw-gram-stream path (MIN is duplicate-invariant; pinned by test).
     sh = df.select(
         F.col(id_col),
         F.expr(shingles_sql(text_col, "spark", n)).alias("shingles"),
-    ).persist()
+    )
     sigs = minhash_signatures_from_shingles(
         sh, id_col, k=k, seed=seed
     )
@@ -321,8 +322,7 @@ def near_dup_pairs_lsh(
         .where(F.col("jaccard") >= threshold)
         .select("id1", "id2", "jaccard")
     )
-    transfer(cands, out)
-    return tether(out, sh)
+    return out
 
 
 def near_dup_pairs_brute(
@@ -339,18 +339,18 @@ def near_dup_pairs_brute(
     ``similarity.embedding_near_dup_pairs``): brute all-pairs is a
     recall oracle for bounded samples by design, never a corpus path —
     an unguarded full-corpus launch would be a quadratic job. The guard
-    count runs on the PERSISTED shingle frame the n^2 join reads
-    anyway, so it doubles as the cache-materializing action instead of
+    count runs on the CHECKPOINTED shingle frame the n^2 join reads
+    anyway, so it doubles as the checkpoint-filling action instead of
     a second upstream scan (VERDICT r5 "What's wrong" #1: the earlier
     ``df.count()`` re-evaluated the unpersisted upstream once for the
     guard and again for the join — a measured ~1.25x tax)."""
-    sh = df.select(
+    sh = checkpoint(df.select(
         F.col(id_col),
         F.expr(shingles_sql(text_col, "spark", n)).alias("shingles"),
-    ).persist()
+    ))
     n_rows = sh.count()
     if n_rows > max_rows:
-        sh.unpersist()
+        release(sh)
         raise ValueError(
             f"brute exact-Jaccard is a recall oracle for samples; got "
             f"{n_rows} rows > max_rows={max_rows} — sample the input "
@@ -369,7 +369,7 @@ def near_dup_pairs_brute(
         .where(F.col("jaccard") >= threshold)
         .select("id1", "id2", "jaccard")
     )
-    return tether(out, sh)
+    return out
 
 
 # -- SimHash -------------------------------------------------------------------
@@ -519,9 +519,11 @@ def simhash_near_dup_pairs(
     ``max_hamming``. Pair generation here is the O(n^2) self-join BASELINE —
     kept as the recall oracle for ``simhash_near_dup_pairs_banded``, the
     bucketed production path. Use this one on samples only."""
-    # tiny frame (id + 1 long), referenced by both join branches: persist so
-    # the token-explode aggregation doesn't run twice
-    sk = simhash(df, id_col, text_col, bits=bits, feature_n=feature_n).persist()
+    # tiny frame (id + 1 long), referenced by both join branches:
+    # checkpoint so the token-explode aggregation doesn't run twice
+    sk = checkpoint(
+        simhash(df, id_col, text_col, bits=bits, feature_n=feature_n)
+    )
     parallelism = df.sparkSession.sparkContext.defaultParallelism
     l = sk.select(
         F.col(id_col).alias("id1"), F.col("simhash").alias("sh1")
@@ -534,7 +536,7 @@ def simhash_near_dup_pairs(
         .where(F.col("hamming") <= max_hamming)
         .select("id1", "id2", "hamming")
     )
-    return tether(out, sk)
+    return out
 
 
 def simhash_band_bounds(bits: int, n_bands: int) -> list[tuple[int, int]]:
@@ -599,7 +601,9 @@ def simhash_near_dup_pairs_banded(
     At corpus scale prefer ``feature_n=3``: unigram features correlate
     sketches on Zipfian text and blow up the candidate stage (see
     :func:`simhash_select_sql`)."""
-    sk = simhash(df, id_col, text_col, bits=bits, feature_n=feature_n).persist()
+    sk = checkpoint(
+        simhash(df, id_col, text_col, bits=bits, feature_n=feature_n)
+    )
     cands = simhash_candidate_pairs(
         sk, id_col, max_hamming=max_hamming, bits=bits
     )
@@ -617,8 +621,7 @@ def simhash_near_dup_pairs_banded(
         .where(F.col("hamming") <= max_hamming)
         .select("id1", "id2", "hamming")
     )
-    transfer(cands, out)
-    return tether(out, sk)
+    return out
 
 
 # -- cluster resolution -------------------------------------------------------
@@ -918,8 +921,8 @@ def substring_dedup(
     line_dedup generalization from line granularity to sliding windows —
     the suffix-array substring dedup's Spark-shaped k-gram form.
 
-    Plan: ONE tokenization pass (the token frame is persisted and
-    tethered to the result — three plan branches consume it) -> sliding
+    Plan: ONE tokenization pass (the token frame is checkpointed —
+    three plan branches consume it) -> sliding
     k-gram keys as a codegen'd ``transform`` over the token array (no
     explode of windows x tokens; one row per window start) -> ONE window
     shuffle on the gram hash (rank of (doc, pos)) -> duplicated starts
@@ -939,11 +942,11 @@ def substring_dedup(
     if k < 2:
         raise ValueError("k must be >= 2")
     gram_hash = hash64_sql(f"concat_ws(' ', slice(__toks, i + 1, {k}))", "spark")
-    toks = df.select(
+    toks = checkpoint(df.select(
         F.col(id_col),
         F.col(text_col).alias("__orig"),
         F.expr(tokens_sql(text_col, "spark")).alias("__toks"),
-    ).persist()
+    ))
     starts = toks.select(
         id_col,
         F.explode(
@@ -1009,7 +1012,7 @@ def substring_dedup(
             (F.col("__total") - n_kept).cast("bigint").alias("n_dropped"),
         )
     )
-    return tether(out, toks)
+    return out
 
 
 def substring_dedup_sql(
@@ -1155,10 +1158,10 @@ def lsh_incremental(
     rows_per_band = 2
     sigs_b = minhash_signatures(
         batch, id_col, text_col, k=k, n=n, seed=seed
-    ).persist()
+    )
     mh_cols = [f"mh_{i}" for i in range(k)]
-    # within-batch candidates: the band self-join persists bands_b, so
-    # the cross join below reads the same cached band explode
+    # within-batch candidates; every reader of sigs_b shares its one
+    # signature exchange (PERFORMANCE.md decision 10)
     bands_b = minhash_bands(sigs_b, id_col, k, rows_per_band)
     within = band_join(bands_b)
     pairs = within.toDF("id_new", "id_prior")
@@ -1200,7 +1203,7 @@ def lsh_incremental(
         .select("id_new", "id_prior", "est_jaccard")
     )
     new_state = prior_sigs
-    return tether(transfer(within, dups), sigs_b), new_state
+    return dups, new_state
 
 
 def pair_metrics(
@@ -1701,8 +1704,9 @@ def containment_pairs(
     substring containment) instead. For near-peer sizes (the common
     dedup regime) banding recall matches the Jaccard path.
 
-    Scale shape: identical to the LSH pipeline — one persisted shingle
-    pass, banded self-equi-join, verify only candidates.
+    Scale shape: identical to the LSH pipeline — one repartition
+    exchange shared by the shingle readers, banded self-equi-join, verify
+    only candidates.
     """
     df = df.repartition(
         df.sparkSession.sparkContext.defaultParallelism, id_col
@@ -1710,7 +1714,7 @@ def containment_pairs(
     sh = df.select(
         F.col(id_col),
         F.expr(shingles_sql(text_col, "spark", n)).alias("shingles"),
-    ).persist()
+    )
     sigs = minhash_signatures_from_shingles(sh, id_col, k=k, seed=seed)
     cands = lsh_candidate_pairs(
         sigs, id_col, k=k, rows_per_band=rows_per_band
@@ -1741,8 +1745,7 @@ def containment_pairs(
         )
         .select("id1", "id2", "c12", "c21", "jaccard")
     )
-    transfer(cands, out)
-    return tether(out, sh)
+    return out
 
 
 # -- exact set-similarity join (prefix filtering) ------------------------------
@@ -1777,7 +1780,7 @@ def set_similarity_join(
     Scale shape: token-frequency rank is vocabulary-sized (broadcast);
     the candidate join's fan-out is bounded by PREFIX token frequency —
     the rarest tokens by construction; verify joins fetch only
-    candidate ids. The shingle frame persists across its three readers
+    candidate ids. The shingle frame is checkpointed for its three readers
     (same discipline as the LSH pipeline).
     """
     if not 0 < threshold <= 1:
@@ -1788,7 +1791,7 @@ def set_similarity_join(
     # dsir-style eager materialization cut was considered and DEFERRED:
     # it adds a job to an already 15-job query and the A/B host window
     # was too noisy to prove the win; revisit only with a quiet host.
-    toks = (
+    toks = checkpoint(
         df.select(
             F.col(id_col),
             F.explode(
@@ -1796,7 +1799,6 @@ def set_similarity_join(
             ).alias("tok"),
         )
         .distinct()
-        .persist()
     )
     # global total order: rarest first, ties by token text — carried
     # as (freq, tok) STRUCT sort inside each doc, NOT a global
@@ -1805,13 +1807,13 @@ def set_similarity_join(
     # total order with zero global state)
     vocab = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("__tf"))
     ranked = toks.join(F.broadcast(vocab), "tok")
-    docs = ranked.groupBy(id_col).agg(
+    docs = checkpoint(ranked.groupBy(id_col).agg(
         F.expr(
             "transform(sort_array(collect_list(struct(__tf, tok))),"
             " x -> x.tok)"
         ).alias("rs"),
         F.count(F.lit(1)).alias("sz"),
-    ).persist()
+    ))
     # ALL threshold arithmetic is integer-exact via the rational form
     # t = p/1000: double 0.8*5 rounds to 4.0000000000000002 (ceil 5!)
     # while DuckDB's DECIMAL gives exactly 4 — the p/q form removes the
@@ -1880,7 +1882,7 @@ def set_similarity_join(
         )
         .orderBy("id1", "id2")
     )
-    return tether(out, toks, docs)
+    return out
 
 
 def set_similarity_join_sql(
@@ -2084,9 +2086,9 @@ def winnow_pairs(
     # fingerprints already known to post 2..max_postings docs, so no
     # row ever materializes an unbounded posting list (the stop-
     # fingerprint scale guard still bites BEFORE any collection).
-    raw = winnow_fingerprints(
+    raw = checkpoint(winnow_fingerprints(
         df, id_col, text_col, ngram=ngram, window=window, distinct=False
-    ).persist()
+    ))
     postings = raw.groupBy("fingerprint").agg(
         F.count_distinct(id_col).alias("__p")
     )
@@ -2114,7 +2116,7 @@ def winnow_pairs(
         .where(F.col("shared") >= min_shared)
         .orderBy(F.desc("shared"), F.asc("id1"), F.asc("id2"))
     )
-    return tether(out, raw)
+    return out
 
 def leakage_check(
     df: DataFrame,
@@ -2169,7 +2171,6 @@ def leakage_check(
     grouped = (
         labeled.groupBy("split_a", "split_b")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_pairs"))
-        .persist()
     )
     totals = grouped.agg(
         F.sum("n_pairs").alias("__tot"),
@@ -2191,7 +2192,7 @@ def leakage_check(
         )
         .orderBy("split_a", "split_b")
     )
-    return tether(out, grouped)
+    return out
 
 def cross_source_dups(
     df: DataFrame,
@@ -2496,9 +2497,10 @@ def substring_span_clusters(
     Returns one row per qualifying span: (id, span_start, span_len,
     span_key, n_docs, n_spans).
 
-    Plan shape (the 100 TB story): ONE tokenization pass (persisted,
-    tethered); window starts as a codegen'd transform over the token
-    array (one row per start, no windows x tokens explode); gram-key
+    Plan shape (the 100 TB story): one tokenization projection (not
+    stored: measured faster, PERFORMANCE.md decision 10); window starts
+    as a codegen'd transform over the token array (one row per start,
+    no windows x tokens explode); gram-key
     two-level agg (map-combinable, high-entropy keys at k >= 8) +
     co-partitioned semi-join; ONE doc-key window shuffle for the island
     merge; span content sliced from the token array (co-located join on
@@ -2516,7 +2518,7 @@ def substring_span_clusters(
     toks = df.select(
         F.col(id_col),
         F.expr(tokens_sql(text_col, "spark")).alias("__toks"),
-    ).persist()
+    )
     starts = toks.select(
         id_col,
         F.explode(
@@ -2564,7 +2566,7 @@ def substring_span_clusters(
                 "spark",
             )
         ).alias("span_key"),
-    ).persist()
+    )
     # two-level, not countDistinct+count in one agg: the mixed form
     # expands the input (one Expand branch per distinct agg) — the
     # (span_key, id) pre-agg is map-combinable and the second level is
@@ -2582,8 +2584,7 @@ def substring_span_clusters(
     out = keyed.join(clusters, "span_key").select(
         id_col, "span_start", "span_len", "span_key", "n_docs", "n_spans"
     )
-    transfer(keyed, out)
-    return tether(out, toks)
+    return out
 
 
 def substring_span_clusters_sql(

@@ -160,12 +160,10 @@ def dsir_weights(
         raise ValueError(f"m must be positive, got {m}")
     if alpha <= 0:
         raise ValueError(f"alpha must be positive, got {alpha}")
-    from harmonize_search_analyze_spark.functions.caching import tether
-
     # ONE gram explosion shared by the fit and weight aggregations — the
     # tokenize+explode pass dominates (measured ~40% of wall at sf0.1
-    # when run twice); materialized EAGERLY via localCheckpoint and
-    # tethered to the returned frame. With a lazy persist, the
+    # when run twice); materialized EAGERLY via localCheckpoint, which
+    # Spark's cleaner frees with its last plan. With a lazy persist, the
     # ratio/total broadcast-subquery futures and the main weight stage
     # race to fill the cache under ONE action, and the per-partition
     # cache locks serialize the md5 gram hashing (profiled: the weight
@@ -221,7 +219,7 @@ def dsir_weights(
             F.coalesce("logw_micro", F.lit(0)).cast("bigint").alias("logw_micro"),
         )
     )
-    return tether(out, bucketed)
+    return out
 
 
 def dsir_sample(

@@ -28,7 +28,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from harmonize_search_analyze_spark.functions.caching import tether
+from harmonize_search_analyze_spark.functions.caching import checkpoint
 from harmonize_search_analyze_spark.functions.tokenize import split_tokens
 
 
@@ -326,24 +326,22 @@ def triangle_count(
     """
     # the canonical edge frame feeds FIVE consumers (degree build, the
     # orientation join, the closure probe, and two summary counts) and
-    # the degree frame four — persist both or the (often expensive)
+    # the degree frame four — checkpoint both or the (often expensive)
     # upstream edge derivation replays per consumer (no CSE across join
-    # branches); lifetimes tether to the returned frame
-    e = (
+    # branches)
+    e = checkpoint(
         edges.where(F.col(src_col) != F.col(dst_col))
         .select(
             F.least(F.col(src_col), F.col(dst_col)).alias("u"),
             F.greatest(F.col(src_col), F.col(dst_col)).alias("v"),
         )
         .distinct()
-        .persist()
     )
-    deg = (
+    deg = checkpoint(
         e.select(F.col("u").alias("node"))
         .unionAll(e.select(F.col("v").alias("node")))
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("d"))
-        .persist()
     )
     du = deg.select(F.col("node").alias("u"), F.col("d").alias("du"))
     dv = deg.select(F.col("node").alias("v"), F.col("d").alias("dv"))
@@ -401,7 +399,7 @@ def triangle_count(
             6,
         ).alias("transitivity"),
     )
-    return tether(out, e, deg)
+    return out
 
 
 def triangle_count_sql(edges_sql: str, dialect: str) -> str:

@@ -43,6 +43,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from harmonize_search_analyze_spark.functions.caching import checkpoint
+
 MEDIA_META_SCHEMA = T.StructType([
     T.StructField("format", T.StringType()),        # png|jpeg|gif|bmp|wav|mp4|webp|unknown
     T.StructField("modality", T.StringType()),      # image|audio|video|unknown
@@ -634,22 +636,17 @@ def image_near_dup_pairs(
     verification, so the scale story is identical — one Arrow decode
     pass, band-key shuffle, verify only candidates, never all pairs.
     Returns (id1, id2, hamming)."""
-    from harmonize_search_analyze_spark.functions.caching import (
-        tether,
-        transfer,
-    )
     from harmonize_search_analyze_spark.operators.dedup import (
         hamming_sql,
         simhash_candidate_pairs,
     )
 
-    sk = (
+    sk = checkpoint(
         image_phash(
             df.select(id_col, binary_col), binary_col, method=method
         )
         .where(F.col("phash").isNotNull())
         .select(id_col, F.col("phash").alias("simhash"))
-        .persist()
     )
     cands = simhash_candidate_pairs(
         sk, id_col, max_hamming=max_hamming, bits=64
@@ -672,8 +669,7 @@ def image_near_dup_pairs(
         .where(F.col("hamming") <= max_hamming)
         .select("id1", "id2", "hamming")
     )
-    transfer(cands, out)
-    return tether(out, sk)
+    return out
 
 
 # -- audio fingerprinting + near-duplicate detection -------------------------
@@ -757,20 +753,15 @@ def audio_near_dup_pairs(
     ``image_near_dup_pairs`` (and the same 100 TB story: one Arrow
     decode pass, band-key shuffle, never all pairs). Returns
     (id1, id2, hamming)."""
-    from harmonize_search_analyze_spark.functions.caching import (
-        tether,
-        transfer,
-    )
     from harmonize_search_analyze_spark.operators.dedup import (
         hamming_sql,
         simhash_candidate_pairs,
     )
 
-    sk = (
+    sk = checkpoint(
         audio_phash(df.select(id_col, binary_col), binary_col)
         .where(F.col("aphash").isNotNull())
         .select(id_col, F.col("aphash").alias("simhash"))
-        .persist()
     )
     cands = simhash_candidate_pairs(
         sk, id_col, max_hamming=max_hamming, bits=64
@@ -793,8 +784,7 @@ def audio_near_dup_pairs(
         .where(F.col("hamming") <= max_hamming)
         .select("id1", "id2", "hamming")
     )
-    transfer(cands, out)
-    return tether(out, sk)
+    return out
 
 
 # -- driver-gate media synthesis (deterministic, SQL-pinnable) ----------------

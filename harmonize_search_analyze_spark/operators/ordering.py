@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from harmonize_search_analyze_spark.functions.caching import checkpoint
 from harmonize_search_analyze_spark.operators.sampling import (
     HASH_BUCKETS,
     sample_hash_sql,
@@ -61,11 +62,9 @@ def global_order(
     """
     if not sort_cols:
         raise ValueError("sort_cols must be non-empty")
-    from harmonize_search_analyze_spark.functions.caching import tether
-
     spec = [(c, ascending) for c in sort_cols]
     order = _sort_columns(spec)
-    src = df.persist()
+    src = checkpoint(df)
     n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
     bounds_frame = _lazy_bounds_frame(src, spec[:1], n)
     tagged = _with_bucket(
@@ -99,7 +98,7 @@ def global_order(
         )
         .drop("__pid", "__local", "__offset")
     )
-    return tether(out, src)
+    return out
 
 
 def global_order_sql(
@@ -873,14 +872,14 @@ def prefix_sums(
     Plan: one boundary sample on the first sort column (an in-plan
     one-row broadcast; ``lazy_bounds=False`` collects it on the driver
     at construction instead, which measures faster for callers that
-    persist the output and read it twice; explicit ``boundaries=`` or
+    checkpoint the output and read it twice; explicit ``boundaries=`` or
     ``bounds_frame=`` skip the sample) -> bucket id as a pure key
     expression -> per-bucket running sums
     (window PARTITIONED by bucket — parallel) -> broadcast join of
     per-bucket prior totals (one row per bucket). Exact for ANY
     boundary placement: the bucket function is monotone in the sort
     order, so every row's bucket-local sum plus the prior-bucket total
-    is the global prefix. The input is persisted only so the local and
+    is the global prefix. The input is checkpointed only so the local and
     offsets branches share one materialization (perf — correctness no
     longer depends on it; see the module note on why
     spark_partition_id() could not give that guarantee).
@@ -889,11 +888,9 @@ def prefix_sums(
         raise ValueError("order_cols must be non-empty")
     if not sums:
         raise ValueError("sums must be non-empty")
-    from harmonize_search_analyze_spark.functions.caching import tether
-
     spec = _order_spec(order_cols)
     order = _sort_columns(spec)
-    src = df.persist()
+    src = checkpoint(df)
     if boundaries is None and bounds_frame is None and lazy_bounds:
         n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
         bounds_frame = _lazy_bounds_frame(src, spec[:1], n)
@@ -935,7 +932,7 @@ def prefix_sums(
             for out in sums.values()
         ],
     )
-    return tether(out, src)
+    return out
 
 
 def ntile_scalable(
@@ -965,11 +962,9 @@ def ntile_scalable(
     """
     if buckets < 1:
         raise ValueError("buckets must be >= 1")
-    from harmonize_search_analyze_spark.functions.caching import tether
-
     spec = _order_spec(order_cols)
     order = _sort_columns(spec)
-    src = df.persist()
+    src = checkpoint(df)
     bounds_frame = None
     if boundaries is None:
         n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
@@ -1017,7 +1012,7 @@ def ntile_scalable(
     out = local.join(F.broadcast(offsets), "__pid").select(
         *df.columns, tile.cast("int").alias(out_col)
     )
-    return tether(out, src)
+    return out
 
 
 def ntile_multi(
@@ -1029,16 +1024,16 @@ def ntile_multi(
 ) -> DataFrame:
     """Exact NTILE over SEVERAL sort axes of one frame (``axes`` maps
     output column -> order spec) — the multi-axis twin of
-    :func:`ntile_scalable` that pays the shared costs once: ONE persist
+    :func:`ntile_scalable` that pays the shared costs once: ONE checkpoint
     of the input, ONE fused boundary-sample pass, and per-axis offset
-    frames computed from the persisted input directly (every bucket id
+    frames computed from the checkpointed input directly (every bucket id
     is a pure projection of the input's columns, so the offsets never
     depend on the growing window chain — each tile stage has exactly
-    one consumer and nothing else to persist).
+    one consumer and nothing else to store).
 
     Per axis the plan adds one bucket-partitioned row_number exchange
     and one broadcast offsets join — the same cost class as a single
-    :func:`ntile_scalable`, minus its persist + sampling job. Every
+    :func:`ntile_scalable`, minus its checkpoint + sampling job. Every
     axis's first sort column must be numeric, timestamp or date (the
     fused sample is an in-plan ``percentile_approx``); others raise
     ``ValueError``.
@@ -1047,8 +1042,6 @@ def ntile_multi(
         raise ValueError("buckets must be >= 1")
     if not axes:
         raise ValueError("axes must be non-empty")
-    from harmonize_search_analyze_spark.functions.caching import tether
-
     specs = {out: _order_spec(spec) for out, spec in axes.items()}
     n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
     bframe = _lazy_bounds_frame(df, [spec[0] for spec in specs.values()], n)
@@ -1056,7 +1049,7 @@ def ntile_multi(
         raise ValueError(
             "ntile_multi needs numeric/timestamp/date first sort columns"
         )
-    src = df.persist()
+    src = checkpoint(df)
 
     def _idiv(a, d):
         return ((a - a % d) / d).cast("bigint")
@@ -1106,7 +1099,7 @@ def ntile_multi(
         out = out.withColumn(out_col, tile.cast("int")).drop(
             pid_col, "__local", "__offset", "__n"
         )
-    return tether(out, src)
+    return out
 
 
 def prefix_max(
@@ -1134,11 +1127,9 @@ def prefix_max(
         raise ValueError("order_cols must be non-empty")
     if not maxes:
         raise ValueError("maxes must be non-empty")
-    from harmonize_search_analyze_spark.functions.caching import tether
-
     spec = _order_spec(order_cols)
     order = _sort_columns(spec)
-    src = df.persist()
+    src = checkpoint(df)
     bounds_frame = None
     if boundaries is None:
         n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
@@ -1184,7 +1175,7 @@ def prefix_max(
             for out in maxes.values()
         ],
     )
-    return tether(out, src)
+    return out
 
 
 def pareto_front(

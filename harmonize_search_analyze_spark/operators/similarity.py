@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from harmonize_search_analyze_spark.functions.caching import tether, transfer
+from harmonize_search_analyze_spark.functions.caching import checkpoint
 from harmonize_search_analyze_spark.sources.tables import local_frame
 
 
@@ -595,11 +595,11 @@ def embedding_near_dup_lsh(
                 "keys": list(np.column_stack(keys)),
             })
 
-    sig_df = df.select(
+    sig_df = checkpoint(df.select(
         id_col, F.col(vec_col).cast("array<double>").alias("v")
     ).mapInPandas(
         sig, f"{id_col} long, v array<double>, nrm double, keys array<long>"
-    ).persist()
+    ))
     cands = band_join(band_frame(sig_df, id_col, "keys"))
 
     def verify(batches):
@@ -636,9 +636,7 @@ def embedding_near_dup_lsh(
         .select("id1", "id2", "v1", "v2", "n1", "n2")
         .mapInPandas(verify, "id1 long, id2 long, cosine double")
     )
-    # signature and band frames unpersist when the result is released/GC'd
-    transfer(cands, out)
-    return tether(out, sig_df)
+    return out
 
 
 def similarity_join(

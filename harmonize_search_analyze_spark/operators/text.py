@@ -17,6 +17,7 @@ import math
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from harmonize_search_analyze_spark.functions.caching import checkpoint
 from harmonize_search_analyze_spark.functions.hashing import hash64_sql
 
 # -- tokenization ------------------------------------------------------------
@@ -1191,13 +1192,11 @@ def jsd_divergence(
     count agg -> a 1-row totals agg broadcast back -> one final fold.
     The corpus is scanned once; everything after the first agg is
     vocab-sized. The count frame feeds two consumers (totals + fold) —
-    persisted, lifetime tethered to the result.
+    checkpointed.
     """
-    from harmonize_search_analyze_spark.functions.caching import tether
-
     toks = tokens_sql(text_col, "spark")
     side = F.expr(side_expr)
-    pairs = (
+    pairs = checkpoint(
         df.where(F.col(text_col).isNotNull() & side.isNotNull())
         .select(side.alias("__side"), F.explode(F.expr(toks)).alias("__t"))
         .groupBy("__t")
@@ -1205,7 +1204,6 @@ def jsd_divergence(
             F.count(F.when(F.col("__side"), 1)).alias("__ca"),
             F.count(F.when(~F.col("__side"), 1)).alias("__cb"),
         )
-        .persist()
     )
     totals = pairs.agg(
         F.sum("__ca").alias("__ta"), F.sum("__cb").alias("__tb")
@@ -1243,7 +1241,7 @@ def jsd_divergence(
             F.round(F.sqrt(F.greatest(F.col("__jsd"), F.lit(0.0))), 6),
         ).alias("jsd_distance"),
     )
-    return tether(out, pairs)
+    return out
 
 
 def jsd_divergence_sql(
@@ -1393,21 +1391,18 @@ def source_jsd_matrix(
     folds from the inner join plus two shared-mass sums — no outer join,
     no per-pair vocabulary union.
 
-    Scale shape: one explode -> one (source, token) agg (persisted; two
+    Scale shape: one explode -> one (source, token) agg (checkpointed; two
     consumers), source totals broadcast back, then ONE token-keyed
     self-join whose fan-out per token is bounded by the number of
     sources carrying it (sources are bounded by contract — this is a
     per-SOURCE matrix, never per-document).
     """
-    from harmonize_search_analyze_spark.functions.caching import tether
-
     toks = tokens_sql(text_col, "spark")
-    counts = (
+    counts = checkpoint(
         df.where(F.col(text_col).isNotNull() & F.col(group_col).isNotNull())
         .select(F.col(group_col).alias("__g"), F.explode(F.expr(toks)).alias("__t"))
         .groupBy("__g", "__t")
         .agg(F.count(F.lit(1)).alias("__c"))
-        .persist()
     )
     totals = counts.groupBy("__g").agg(F.sum("__c").alias("__tot"))
     probs = counts.join(F.broadcast(totals), "__g").select(
@@ -1456,7 +1451,7 @@ def source_jsd_matrix(
         )
         .orderBy("source_a", "source_b")
     )
-    return tether(out, counts)
+    return out
 
 
 def source_jsd_matrix_sql(
@@ -1536,7 +1531,6 @@ def heaps_law(
     """
     if buckets < 2:
         raise ValueError("buckets must be >= 2")
-    from harmonize_search_analyze_spark.functions.caching import tether
     from harmonize_search_analyze_spark.operators.ordering import (
         ntile_scalable,
     )
@@ -1554,10 +1548,9 @@ def heaps_law(
     # per-token first appearance + per-bucket token totals ride ONE
     # (bucket, token)-keyed agg; both downstream consumers are
     # buckets-sized after the second agg
-    per_bt = (
+    per_bt = checkpoint(
         bucketed.groupBy("__b", "__t")
         .agg(F.count(F.lit(1)).alias("__c"))
-        .persist()
     )
     first = (
         per_bt.groupBy("__t").agg(F.min("__b").alias("__fb"))
@@ -1604,7 +1597,7 @@ def heaps_law(
             6,
         ).alias("r2"),
     )
-    return tether(out, per_bt)
+    return out
 
 
 def heaps_law_sql(
@@ -1772,15 +1765,12 @@ def template_prefixes(
     """
     if prefix_len < 1:
         raise ValueError("prefix_len must be >= 1")
-    from harmonize_search_analyze_spark.functions.caching import tether
-
-    counts = (
+    counts = checkpoint(
         df.where(F.col(text_col).isNotNull())
         .groupBy(
             F.substring(F.col(text_col), 1, prefix_len).alias("prefix")
         )
         .agg(F.count(F.lit(1)).alias("n"))
-        .persist()
     )
     total = counts.agg(F.sum("n").alias("__tot"))
     out = (
@@ -1793,7 +1783,7 @@ def template_prefixes(
         .orderBy(F.desc("n"), F.asc("prefix"))
         .limit(k)
     )
-    return tether(out, counts)
+    return out
 
 
 def template_prefixes_sql(
@@ -1844,19 +1834,17 @@ def vocab_coverage(
     must never be an unpartitioned window; totals ride a broadcast
     1-row agg.
     """
-    from harmonize_search_analyze_spark.functions.caching import tether
     from harmonize_search_analyze_spark.operators.ordering import (
         prefix_sums,
     )
 
     toks = tokens_sql(text_col, "spark")
-    vocab = (
+    vocab = checkpoint(
         df.where(F.col(text_col).isNotNull())
         .select(F.explode(F.expr(toks)).alias("__t"))
         .groupBy("__t")
         .agg(F.count(F.lit(1)).alias("__c"))
         .withColumn("__one", F.lit(1))
-        .persist()
     )
     tot = vocab.agg(
         F.sum("__c").alias("__tot"),
@@ -1883,7 +1871,7 @@ def vocab_coverage(
         )
         .orderBy("k")
     )
-    return tether(out, vocab)
+    return out
 
 
 def vocab_coverage_sql(
@@ -2093,11 +2081,9 @@ def pmi_collocations(
     explode+agg each for bigram and unigram counts, two vocab-frame
     joins, a 1-row totals broadcast, vocab-sized top-k.
     """
-    from harmonize_search_analyze_spark.functions.caching import tether
-
     # one tokenization pass shared by the unigram, bigram, and totals
-    # consumers (persist + tether: the MinHash discipline)
-    toks = (
+    # consumers (checkpointed)
+    toks = checkpoint(
         df.where(F.col(text_col).isNotNull())
         .select(
             F.expr(
@@ -2105,7 +2091,7 @@ def pmi_collocations(
                 " t -> t != '')"
             ).alias("__t")
         )
-    ).persist()
+    )
     uni = (
         toks.select(F.explode("__t").alias("w"))
         .groupBy("w")
@@ -2153,7 +2139,7 @@ def pmi_collocations(
         .orderBy(F.desc("pmi"), F.asc("w1"), F.asc("w2"))
         .limit(top)
     )
-    return tether(out, toks)
+    return out
 
 
 def pmi_collocations_sql(
@@ -2248,7 +2234,7 @@ def doc_keywords(
     base = df.where(
         F.col(text_col).isNotNull() & F.col(id_col).isNotNull()
     )
-    tf = (
+    tf = checkpoint(
         base.select(
             F.col(id_col).alias("doc"),
             F.explode(
@@ -2260,9 +2246,7 @@ def doc_keywords(
         )
         .groupBy("doc", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
-    ).persist()
-    from harmonize_search_analyze_spark.functions.caching import tether
-
+    )
     dft = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     dd = F.broadcast(
         base.agg(F.count(F.lit(1)).cast("double").alias("__d"))
@@ -2294,7 +2278,7 @@ def doc_keywords(
         )
         .orderBy(F.asc("doc"), F.asc("rk"))
     )
-    return tether(out, tf)
+    return out
 
 
 def doc_keywords_sql(
@@ -2368,13 +2352,11 @@ def llr_collocations(
     (PMI is evidence-blind). Returns the ``top`` pairs by LLR DESC
     (w1, w2 ASC ties): ``(w1, w2, c12, r1, c2, llr)`` rounded 6.
 
-    Scale shape: one persisted tokenization pass, bigram counts from a
+    Scale shape: one checkpointed tokenization pass, bigram counts from a
     slice zip, first/second position margins as window sums over the
     bigram frame (vocab-pair-sized), and a 1-row broadcast.
     """
-    from harmonize_search_analyze_spark.functions.caching import tether
-
-    toks = (
+    toks = checkpoint(
         df.where(F.col(text_col).isNotNull())
         .select(
             F.expr(
@@ -2383,8 +2365,8 @@ def llr_collocations(
             ).alias("__t")
         )
         .where(F.size("__t") >= 2)
-    ).persist()
-    bi = (
+    )
+    bi = checkpoint(
         toks.select(
             F.explode(
                 F.expr(
@@ -2397,7 +2379,7 @@ def llr_collocations(
         .select("bg.w1", "bg.w2")
         .groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).alias("c12"))
-    ).persist()
+    )
     # Round-11 (the mutual_info / ipf_weights pattern — margin joins ->
     # window aggregates, guide §2.1/§2.4): r1/c2 were two groupBy-agg
     # subtrees joined back onto bi — profiled as the query's two heaviest
@@ -2445,7 +2427,7 @@ def llr_collocations(
         .orderBy(F.desc("llr"), F.asc("w1"), F.asc("w2"))
         .limit(top)
     )
-    return tether(tether(out, toks), bi)
+    return out
 
 
 def llr_collocations_sql(

@@ -20,9 +20,7 @@ _NANOS_FLAG = "spark.sql.legacy.parquet.nanosAsLong"
 
 # Inputs below this compressed size are eligible for spreading across the
 # cluster (see load_table). 256 MB ~= a couple of default parquet row groups.
-SPREAD_THRESHOLD_BYTES = int(
-    os.environ.get("SPARK_GRAFT_SPREAD_BYTES", 256 * 1024 * 1024)
-)
+SPREAD_THRESHOLD_BYTES = 256 * 1024 * 1024
 
 # Schema (metadata) cache: (resolved path, mtime_ns, size) -> (StructType,
 # nanos-flag needed). A bare ``spark.read.parquet(path)`` re-lists the
@@ -71,15 +69,8 @@ def load_table(
     compute genuinely dominates (the brute-force pair operators repartition
     internally for exactly that reason).
     """
-    if os.environ.get("SPARK_GRAFT_SPREAD_DEFAULT") == "1":
-        # measurement rig only (the per-query spread A/B): force the
-        # spread path on every load so a full bench run can identify the
-        # queries whose per-row work beats the repartition cost
-        spread = True
     path = f"{sf_dir}/{name}.parquet"
     stamp = _path_stamp(path)
-    if os.environ.get("SPARK_GRAFT_NO_SCHEMA_CACHE") == "1":
-        stamp = None  # measurement kill-switch for A/B runs
     cached = _SCHEMA_CACHE.get(stamp) if stamp is not None else None
     if cached is not None:
         schema, needs_nanos = cached

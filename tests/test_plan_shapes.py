@@ -706,15 +706,21 @@ def test_step_transitions_no_window(spark):
 
 def test_ks_drift_single_scan_bounded_window(spark):
     """Raw rows collapse to per-value counts before the CDF window; one
-    scan, window input is the distinct-value frame."""
+    scan, window input is the distinct-value frame. The raw rows are read
+    once, into the checkpointed per-value frame, so the result's plan
+    reads that checkpoint and never the input itself."""
+    from pyspark.sql import functions as F
+
     from harmonize_search_analyze_spark.operators.analytics import ks_drift
 
-    df = spark.createDataFrame(
-        [("a" if i % 2 else "b", float(i % 13)) for i in range(200)],
-        ["g", "v"],
+    # a range input, so the only stored scans are the operator's own
+    df = spark.range(200).select(
+        F.when(F.col("id") % 2 == 1, "a").otherwise("b").alias("g"),
+        (F.col("id") % 13).cast("double").alias("v"),
     )
     out = ks_drift(df, "v", "g", "a", "b")
     out.collect()
     p = _plan(out)
-    assert p.count("Scan ExistingRDD") == 1, p
+    assert "Range (" not in p, p
+    assert "Scan ExistingRDD" in p, p
     assert "Python" not in p, p
