@@ -4,15 +4,51 @@
 it fills it, and it lives while any plan reads it, frames derived from the
 operator's result included. Spark's ``ContextCleaner`` frees it seconds after
 the JVM collects the last such plan; ``release``/``scoped`` free it eagerly.
-Like the engine's loop checkpoints, it does not survive the loss of the
-executor that holds it.
+It does not survive the loss of the executor that holds it.
+
+``iterate(state, step, iters, measure=None)`` is the one driver for an
+operator loop over a frame. It registers its checkpoints as ``checkpoint``
+does, so ``release`` frees them too. Checkpoints cut lineage: without them
+every step's plan embeds the previous one, Catalyst re-analyses (and
+re-runs) the whole unrolled chain, and a 12-step chain OOMed the driver on
+plan size alone.
+
+- Without ``measure`` (pagerank, markov_stationary) it applies ``step``
+  ``iters`` times and checkpoints lazily after every second step and
+  after the last; it returns the state. A depth-2 plan costs less than a
+  checkpoint round-trip: markov_stationary at sf0.1 took 2.74 s against
+  3.15 s with a checkpoint per step; every third step was no better, and
+  no checkpoints at all took 3.7-4.5 s. Lazy, the checkpoints fill inside
+  the final action's jobs instead of one job each.
+- With ``measure``, an aggregate Column over the state that repeats
+  exactly when a step changed nothing (connected_components, k_core),
+  every checkpoint is eager and carries ``measure`` as an ``observe()``
+  metric of its own job, the initial state's included, so detecting the
+  fixpoint costs no extra action (a separate count per step cost
+  0.3-0.5 s per connected_components query at sf0.1). The loop stops at
+  the first repeat and returns ``(state, reached_fixpoint)``. An empty
+  state measures NULL, which repeats, so it stops after one step. The
+  measure is taken on the state being checkpointed: an ``observe`` on a
+  frame that two join branches read fails in ``toPyRow``. A checkpoint
+  per step tied one per two steps on dedup_clusters (PERFORMANCE.md
+  decisions 9 and 11).
+
+Loops that stay hand-written (their lazy checkpoints still use
+``checkpoint``):
+
+- ``hits_scores``: two coupled states, and it checkpoints the raw
+  aggregate inside the step.
+- ``kcenter_select``, ``bpe_train``, ``kmeans_train``: each round makes a
+  driver-side decision from a collect.
+- ``ipf_weights``: one window chain with no checkpoints.
 """
 
 from __future__ import annotations
 
 import contextlib
+from typing import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 
 _MADE: dict[int, list[int]] = {}  # checkpoint RDD id -> engine ones it read
 
@@ -24,10 +60,36 @@ def _rdd_ids(df: DataFrame) -> list[int]:
             if lf.getClass().getSimpleName() == "LogicalRDD"]
 
 
-def checkpoint(df: DataFrame) -> DataFrame:
-    out = df.localCheckpoint(eager=False)
+def _store(df: DataFrame, eager: bool) -> DataFrame:
+    out = df.localCheckpoint(eager=eager)
     _MADE[_rdd_ids(out)[0]] = [i for i in _rdd_ids(df) if i in _MADE]
     return out
+
+
+def checkpoint(df: DataFrame) -> DataFrame:
+    return _store(df, eager=False)
+
+
+def iterate(state: DataFrame, step: Callable[[DataFrame], DataFrame],
+            iters: int, measure: Column | None = None):
+    if measure is None:
+        for i in range(iters):
+            state = step(state)
+            if i % 2 or i == iters - 1:
+                state = checkpoint(state)
+        return state
+
+    def observed(df: DataFrame):
+        obs = Observation()
+        return _store(df.observe(obs, measure.alias("m")), eager=True), obs
+
+    state, obs = observed(state)
+    for _ in range(iters):
+        seen = obs.get["m"]
+        state, obs = observed(step(state))
+        if obs.get["m"] == seen:
+            return state, True
+    return state, False
 
 
 def release(out: DataFrame) -> None:

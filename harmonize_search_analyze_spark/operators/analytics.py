@@ -30,7 +30,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from harmonize_search_analyze_spark.functions.caching import checkpoint
+from harmonize_search_analyze_spark.functions.caching import checkpoint, iterate
 from harmonize_search_analyze_spark.sources.tables import local_frame
 
 
@@ -3155,8 +3155,8 @@ def markov_stationary(
     user-keyed exchange); the matrix and the iterated vector are
     STATE-sized (k x k and k rows), so every iteration is a k-row join
     — metadata work after the first agg, like pagerank's rank frame but
-    bounded by the state alphabet. localCheckpoint per iteration pins
-    the loop lineage (the pagerank/k_core replay trap).
+    bounded by the state alphabet. The power iteration runs on
+    ``caching.iterate``'s fixed-loop cadence.
     """
     if iters < 1:
         raise ValueError("iters must be >= 1")
@@ -3205,31 +3205,17 @@ def markov_stationary(
     # (round 11): lit(1.0)/BIGINT column is the same IEEE division the
     # collected-literal form produced; one fewer job per call
     nn = F.broadcast(states.agg(F.count(F.lit(1)).alias("__n")))
-    v = states.crossJoin(nn).select(
-        "__s", (F.lit(1.0) / F.col("__n")).alias("__v")
-    ).localCheckpoint(eager=False)
-    # round-10 optimization notes: dropping the checkpoints ENTIRELY
-    # (v is referenced once per level, so lineage is linear, not the
-    # pagerank replay trap) was tried and MEASURED SLOWER at sf0.1
-    # (2.9 s -> 3.7-4.5 s): the depth-12 lazy plan pays more in Catalyst
-    # analysis + un-reused tiny broadcast builds than 12 checkpoint
-    # round-trips cost. Checkpointing every SECOND step (depth-2 plans)
-    # keeps analysis flat while halving the materialization jobs:
-    # 3.15 s -> 2.74 s warm, output hash identical (the unrolled pair
-    # executes the same join+agg dataflow; cadence 3 measured no better).
-    # Round-11: the cadence-2 checkpoints are LAZY — each still compiles
-    # its own depth-2 plan (Catalyst analysis stays flat; the LogicalRDD
-    # truncates lineage exactly as the eager form did) but the
-    # materialization rides the final action instead of one eager job
-    # per pair of levels (~6 fewer job submissions + driver gaps).
-    for i in range(iters):
-        v = (
+    v = iterate(
+        checkpoint(states.crossJoin(nn).select(
+            "__s", (F.lit(1.0) / F.col("__n")).alias("__v")
+        )),
+        lambda v: (
             p.join(v, "__s")
             .groupBy(F.col("__t").alias("__s"))
             .agg(F.sum(F.col("__v") * F.col("__p")).alias("__v"))
-        )
-        if (i + 1) % 2 == 0 or i == iters - 1:
-            v = v.localCheckpoint(eager=False)
+        ),
+        iters,
+    )
     out = (
         v.join(outs, v["__s"] == outs["__from"], "left")
         .select(

@@ -17,7 +17,7 @@ Spark-shaped:
    justified metadata collect, same contract as kmeans_train), and the
    merge applies as a per-row array fold. ``localCheckpoint`` every round
    truncates the growing lineage (measured necessity — see
-   connected_components).
+   ``functions.caching``).
 
 Ties are pinned (count DESC, then pair lexicographic ASC) so training is
 deterministic; the merge table is the model. Encoding applies the learned
@@ -91,7 +91,6 @@ def bpe_train(
     n_merges: int = 20,
     min_pair_count: int = 2,
     driver_threshold: int = 200_000,
-    checkpoint_every: int = 1,
 ) -> list[tuple[str, str]]:
     """Learn ``n_merges`` BPE merges from the corpus. Returns the ordered
     merge list [(left, right), ...] — the tokenizer model.
@@ -111,18 +110,15 @@ def bpe_train(
     The distributed loop's per-round driver round-trip is ONE row (the
     argmax pair — the same justified-collect contract as kmeans_train)
     and is inherent to exact sequential BPE: each merge decision needs
-    the recount. ``checkpoint_every`` controls how often the symbol
-    table is ``localCheckpoint``-ed; batching checkpoints (K=4) was
-    MEASURED at 299k distinct words and is 1.5x SLOWER than K=1 — the
-    un-materialized fold chain re-executes inside every subsequent
-    round's pair-count job, and re-running array folds over the vocab
-    costs more than the local checkpoint write it saves (PERFORMANCE.md,
-    round 3). Default stays 1 (materialize per merge); the knob remains
-    for storage-constrained drivers. Timings at 299k words / 12 merges:
-    driver loop 24.7s, distributed K=1 27.0s, K=4 39.7s — identical
-    merge sequences on all paths (pinned by test)."""
-    if checkpoint_every < 1:
-        raise ValueError("checkpoint_every must be >= 1")
+    the recount. The symbol table is eagerly ``localCheckpoint``-ed
+    after every merge: checkpointing every 4th merge MEASURED 1.5x
+    SLOWER at 299k distinct words — the un-materialized fold chain
+    re-executes inside every later round's pair-count job, and re-running
+    array folds over the vocab costs more than the local checkpoint
+    write it saves (PERFORMANCE.md, round 3). Timings at 299k words / 12
+    merges: driver loop 24.7s, distributed per-merge checkpoint 27.0s,
+    every 4th merge 39.7s — identical merge sequences on all paths
+    (pinned by test)."""
     words = _word_counts(df, text_col)
     n_words = words.count()
     if n_words <= driver_threshold:
@@ -138,7 +134,6 @@ def bpe_train(
         ).alias("syms"),
     ).localCheckpoint(eager=True)
     merges: list[tuple[str, str]] = []
-    depth = 0  # unmaterialized fold expressions chained on syms
     for _ in range(n_merges):
         pairs = (
             syms.select(
@@ -171,11 +166,9 @@ def bpe_train(
             f"AND s = '{rb}' THEN concat(slice(acc, 1, size(acc) - 1), "
             f"array('{la}{rb}')) ELSE concat(acc, array(s)) END)"
         )
-        syms = syms.select("weight", F.expr(merge_expr).alias("syms"))
-        depth += 1
-        if depth >= checkpoint_every:
-            syms = syms.localCheckpoint(eager=True)
-            depth = 0
+        syms = syms.select(
+            "weight", F.expr(merge_expr).alias("syms")
+        ).localCheckpoint(eager=True)
     return merges
 
 

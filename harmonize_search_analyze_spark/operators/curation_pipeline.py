@@ -37,6 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from harmonize_search_analyze_spark.functions.caching import checkpoint
 from harmonize_search_analyze_spark.operators.curation import clean_text_sql
 from harmonize_search_analyze_spark.operators.sampling import (
     HASH_BUCKETS,
@@ -177,9 +178,9 @@ def run_corpus_pipeline(
             # left side; without materialization the whole upstream
             # filter/redact chain executes twice (profiled: two
             # duplicate 1.26 s single-task stages at sf0.1 — no CSE
-            # across join branches, round 11). localCheckpoint (not
+            # across join branches, round 11). A checkpoint (not
             # persist) keeps AQE coalescing for the consumers.
-            out = out.localCheckpoint(eager=False)
+            out = checkpoint(out)
             ld = line_dedup(
                 out.select(id_col, text_col),
                 id_col,

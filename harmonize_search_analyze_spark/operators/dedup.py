@@ -25,11 +25,13 @@ from __future__ import annotations
 
 import uuid
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType
 
 from harmonize_search_analyze_spark.functions.caching import (
     checkpoint,
+    iterate,
     release,
 )
 from harmonize_search_analyze_spark.functions.hashing import (
@@ -640,34 +642,37 @@ def connected_components(
     actually keys on (keep one doc per cluster, not per pair; pairs alone
     under-delete transitive chains a~b~c).
 
-    Min-label propagation to fixpoint: per iteration each node takes the
-    min of its label and its neighbors' labels (one join + one hash agg on
-    the SYMMETRIZED edge list), converging in O(component diameter)
-    iterations — near-dup components are short chains in practice. The
-    per-iteration driver action is ONE scalar (changed-count) read from an
-    ``observe()`` metric collected DURING the checkpoint's own
-    materialization job (round-10: the old separate ``limit(1).count()``
-    job cost one extra job submission + planning gap per iteration,
-    measured ~0.3-0.5 s per CC-backed query at sf0.1); all real work is
-    distributed.
-    Each iteration's labels are eagerly ``localCheckpoint``-ed: unlike
-    ``persist`` (which caches data but keeps the logical plan), the
-    checkpoint TRUNCATES lineage — without it every iteration's plan embeds
-    the previous one and Catalyst analysis blows up exponentially (a
-    12-iteration chain OOMed the driver on plan size alone, measured).
-    The result is algorithm-independent (the min reachable id is unique),
-    which is what lets a recursive-CTE oracle verify this loop exactly.
+    Min-label propagation to fixpoint on ``caching.iterate``: per step
+    each node takes the min of its label and its neighbors' labels (one
+    join + one hash agg on the SYMMETRIZED edge list), converging in
+    O(component diameter) steps — near-dup components are short chains
+    in practice. Labels only fall, so the fixpoint is the first step
+    whose exact label sum (``decimal(38,0)``) repeats; the sum rides each
+    step's checkpoint job as an ``observe()`` metric, so the only
+    per-step driver work is reading one scalar. The result is
+    algorithm-independent (the min reachable id is unique), which is
+    what lets a recursive-CTE oracle verify this loop exactly.
+
+    Ids must be integral (the label sum is exact only for them); another
+    id type raises ``TypeError`` before any job runs. Raises
+    ``RuntimeError`` when the labels have not reached the fixpoint within
+    ``max_iters`` steps.
 
     Returns (id, cluster_id) for every id appearing in a pair; singletons
     never enter the graph — callers left-join and coalesce to the id.
     """
+    types = [f.dataType for f in pairs.select(id1, id2).schema]
+    if not all(isinstance(t, IntegralType) for t in types):
+        raise TypeError(
+            f"connected_components needs integral ids, got {types}"
+        )
     # Symmetrize via ONE explode instead of union(e, e.swapped): a union
     # consumes the pairs frame twice and Catalyst does not CSE across
     # union branches, so the entire upstream pair pipeline (LSH banding +
     # verify — the expensive part) executed TWICE inside the edges
     # materialization (SQL-tab: duplicated 17.7 s/5.4 s agg-build
     # subtrees in dedup_clusters, round-10). Same rows, one pass.
-    edges = (
+    edges = checkpoint(
         pairs.select(
             F.explode(
                 F.array(
@@ -682,94 +687,34 @@ def connected_components(
         )
         .select("__e.a", "__e.b")
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    labels = (
-        edges.select(F.col("a").alias("id"))
-        .distinct()
-        .withColumn("cluster_id", F.col("id"))
-        .localCheckpoint(eager=True)
-    )
-    def _step(lbls: DataFrame, obs: "Observation | None") -> DataFrame:
+
+    def step(lbls: DataFrame) -> DataFrame:
         # ONE exchange per propagation step (round-10 optimization pass):
-        # the old shape was nbr = edges-join-labels -> groupBy(a) MIN
-        # (first exchange) -> labels LEFT JOIN nbr (second exchange/
-        # broadcast). Instead, union the node's own label row with its
-        # propagated neighbor-label rows and take both MIN(label) and
-        # the old label in a single id-keyed aggregation —
-        # min(old, min(nbrs)) is the identical propagation step, and
-        # every node keeps exactly one __old row so MIN(CASE WHEN __old
-        # ...) recovers its previous label for the convergence flag.
-        # Same fixpoint, same labels (min-reachable-id is
-        # algorithm-independent). The convergence scalar rides the
-        # checkpoint job itself as an observe() metric — CollectMetrics
-        # reports when the eager materialization runs, so no second
-        # action per super-step.
+        # the node's own label row and its neighbors' label rows meet in
+        # a single id-keyed MIN — min(old, min(nbrs)) — instead of a
+        # neighbor MIN agg followed by a second join back onto labels.
         prop = edges.join(
             lbls.select(
-                F.col("id").alias("b"),
-                F.col("cluster_id").alias("lbl"),
+                F.col("id").alias("b"), F.col("cluster_id").alias("lbl")
             ),
             "b",
-        ).select(F.col("a").alias("id"), "lbl", F.lit(False).alias("__old"))
-        new = (
-            lbls.select(
-                "id",
-                F.col("cluster_id").alias("lbl"),
-                F.lit(True).alias("__old"),
-            )
+        ).select(F.col("a").alias("id"), "lbl")
+        return (
+            lbls.select("id", F.col("cluster_id").alias("lbl"))
             .unionByName(prop)
             .groupBy("id")
-            .agg(
-                F.min("lbl").alias("cluster_id"),
-                F.min(F.when(F.col("__old"), F.col("lbl"))).alias("__prev"),
-            )
-        )
-        if obs is None:
-            return new.select("id", "cluster_id")
-        return (
-            new.select(
-                "id",
-                "cluster_id",
-                (F.col("cluster_id") < F.col("__prev")).alias("__changed"),
-            )
-            .observe(
-                obs, F.sum(F.col("__changed").cast("long")).alias("n")
-            )
-            .drop("__changed")
-            .localCheckpoint(eager=True)
+            .agg(F.min("lbl").alias("cluster_id"))
         )
 
-    # Checkpoint CADENCE 2 (round 11, the markov/pagerank trade): run TWO
-    # propagation steps per eager materialization and observe the second.
-    # A depth-2 plan costs less than a checkpoint round-trip, and the
-    # extra no-op step a cadence-2 probe may execute at the fixpoint is
-    # the identity (min(old, min(nbrs)) = old), so the returned labels —
-    # and the raise-iff-not-converged-within-max_iters contract — are
-    # unchanged: the super-step ends align on even steps plus a final
-    # single step when max_iters is odd, so every convergence point the
-    # old per-step loop could observe within max_iters is still observed
-    # at or before the same step count. Measured on 4 cores at sf0.1
-    # (dedup_clusters, 20 alternating trials a side): median 1.384 s at
-    # cadence 2 vs 1.413 s at cadence 1, inside either side's spread, so
-    # the benchmarked cadence stays (PERFORMANCE.md decision 9).
-    steps_done = 0
-    converged = False
-    while steps_done < max_iters:
-        span = min(2, max_iters - steps_done)
-        obs = Observation(f"__cc_changed_{id(pairs)}_{steps_done}")
-        lbls = labels
-        for s in range(span):
-            lbls = _step(lbls, obs if s == span - 1 else None)
-        steps_done += span
-        # SUM over an empty labels frame observes NULL, not 0 — an
-        # empty pair graph must terminate on the first super-step, not
-        # spin to max_iters and raise (review find, round 10)
-        changed = obs.get["n"] or 0
-        labels = lbls
-        if changed == 0:
-            converged = True
-            break
+    labels, converged = iterate(
+        edges.select(F.col("a").alias("id"))
+        .distinct()
+        .withColumn("cluster_id", F.col("id")),
+        step,
+        max_iters,
+        F.sum(F.col("cluster_id").cast("decimal(38,0)")),
+    )
     if not converged:
         raise RuntimeError(
             f"connected_components did not converge in {max_iters} "
@@ -1230,7 +1175,7 @@ def pair_metrics(
     count + the tp join) and Catalyst does not CSE across crossJoin
     branches, so without materialization the whole upstream pair
     pipeline (LSH banding / brute verify — the expensive part) executes
-    twice per side: localCheckpoint pins the normalized pair frames
+    twice per side: a checkpoint pins the normalized pair frames
     once (round-10; dedup_eval profile-session wall 4.0 s -> 2.3 s at
     sf0.1, the duplicated 13.1 s/11.3 s agg-build subtrees collapse to
     one execution each in the SQL tab).
@@ -1238,10 +1183,10 @@ def pair_metrics(
     consumers (the cached-subplan trap documented in phrase_suggest).
     """
     def norm(df: DataFrame) -> DataFrame:
-        return df.select(
+        return checkpoint(df.select(
             F.least(F.col(id1), F.col(id2)).alias("__a"),
             F.greatest(F.col(id1), F.col(id2)).alias("__b"),
-        ).distinct().localCheckpoint(eager=False)
+        ).distinct())
 
     c, t = norm(candidates), norm(truth)
     tp = c.join(t, ["__a", "__b"])

@@ -28,7 +28,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from harmonize_search_analyze_spark.functions.caching import checkpoint
+from harmonize_search_analyze_spark.functions.caching import checkpoint, iterate
 from harmonize_search_analyze_spark.functions.tokenize import split_tokens
 
 
@@ -53,14 +53,14 @@ def graph_explore(
     # materialization each re-runs the tokenize+explode. persist() was
     # MEASURED SLOWER in round 10 (1.9 s -> 2.6-3.0 s at sf0.1): a cached
     # subplan compiles without AQE coalescing, so each consumer pays
-    # fixed full-width scans. A lazy localCheckpoint materializes the
-    # ~6 MB token frame once and KEEPS AQE coalescing for every consumer.
+    # fixed full-width scans. A lazy checkpoint materializes the ~6 MB
+    # token frame once and KEEPS AQE coalescing for every consumer.
     # The un-checkpointed plan measured slower on 4 cores (PERFORMANCE.md
     # decision 9).
-    tok = df.where(F.col(text_col).isNotNull()).select(
+    tok = checkpoint(df.where(F.col(text_col).isNotNull()).select(
         F.col(id_col).alias("__doc"),
         F.explode(F.array_distinct(split_tokens(text_col))).alias("term"),
-    ).localCheckpoint(eager=False)
+    ))
     seed_docs = tok.where(F.col("term") == seed).select("__doc").distinct()
     v0 = (
         tok.join(seed_docs, "__doc")
@@ -152,8 +152,8 @@ def pagerank(
     oracle replays CTE-for-CTE. Dangling mass (nodes with no
     out-edges) redistributes uniformly, the standard correction. At
     100 TB: ranks are node-sized (<< edges), the edges frame is scanned
-    once per iteration — pre-partition edges by src and
-    localCheckpoint the rank frame if iters grows past a handful.
+    once per iteration — pre-partition edges by src. The rank frame is
+    checkpointed on ``caching.iterate``'s fixed-loop cadence.
     Returns (node, rank) ordered (rank DESC, node ASC); ranks sum to 1.
     """
     w = (
@@ -164,13 +164,13 @@ def pagerank(
     # edges are loop-invariant but referenced every unrolled iteration
     # (contrib join) — without truncating lineage Catalyst would
     # replay the whole edge-derivation subtree (often an expensive
-    # co-occurrence self-join) every time. localCheckpoint materializes
+    # co-occurrence self-join) every time. A checkpoint materializes
     # it once; measured 19.3s -> ~4s at sf0.1 on the co-occurrence gate.
-    e = edges.select(
+    e = checkpoint(edges.select(
         F.col(src_col).alias("__s"),
         F.col(dst_col).alias("__t"),
         w.alias("__w"),
-    ).localCheckpoint(eager=False)
+    ))
     # ONE pass + ONE shuffle builds the loop-invariant node frame WITH
     # each node's out-weight baked in (round-11 optimization pass; the
     # old shape was nodes = union+distinct, outw = a second groupBy, and
@@ -180,7 +180,7 @@ def pagerank(
     # weight, dst endpoints a NULL: SUM() ignores NULLs, so a node with
     # no out-edges gets __ow NULL — exactly the old left-anti dangling
     # set, now a plain filter on the rank frame.
-    base = (
+    base = checkpoint(
         e.select(
             F.explode(
                 F.array(
@@ -197,13 +197,10 @@ def pagerank(
         .select("__x.node", "__x.__wc")
         .groupBy("node")
         .agg(F.sum("__wc").alias("__ow"))
-        .localCheckpoint(eager=False)
     )
     nn = F.broadcast(base.agg(F.count(F.lit(1)).alias("__n")))
-    r = base.crossJoin(nn).select(
-        "node", "__ow", (F.lit(1.0) / F.col("__n")).alias("rank")
-    )
-    for i in range(iters):
+
+    def step(r: DataFrame) -> DataFrame:
         contrib = (
             e.join(r, e.__s == r.node)
             .groupBy("__t")
@@ -213,7 +210,7 @@ def pagerank(
             r.where(F.col("__ow").isNull())
             .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("__dang"))
         )
-        r = (
+        return (
             base.crossJoin(nn)
             .crossJoin(dangling)
             .join(contrib, base.node == contrib.__t, "left")
@@ -230,16 +227,14 @@ def pagerank(
                 ).alias("rank"),
             )
         )
-        # rank frames are node-sized; truncating their lineage keeps the
-        # unrolled plan flat. Cadence 2 (checkpoint every 2nd iteration +
-        # the last) halves the materialization jobs — the depth-2 lazy
-        # plan costs less than a checkpoint round-trip, the same measured
-        # trade as markov_stationary's cadence (round 10).
-        # Lazy (round 11): each checkpoint still compiles a flat plan and
-        # truncates lineage, but materialization rides the final action's
-        # own job DAG instead of one eager job per cadence step.
-        if i % 2 == 1 or i == iters - 1:
-            r = r.localCheckpoint(eager=False)
+
+    r = iterate(
+        base.crossJoin(nn).select(
+            "node", "__ow", (F.lit(1.0) / F.col("__n")).alias("rank")
+        ),
+        step,
+        iters,
+    )
     return r.select("node", F.round("rank", 6).alias("rank")).orderBy(
         F.desc("rank"), F.asc("node")
     )
@@ -349,16 +344,16 @@ def triangle_count(
     u_first = (F.col("du") < F.col("dv")) | (
         (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
     )
-    # oriented has three readers: a lazy localCheckpoint computes it
-    # once WITHOUT the SQL-cache AQE trap persist() has (LogicalRDD
-    # keeps the parent partitioning; persist measured FLAT in round 10).
+    # oriented has three readers: a lazy checkpoint computes it once
+    # WITHOUT the SQL-cache AQE trap persist() has (LogicalRDD keeps the
+    # parent partitioning; persist measured FLAT in round 10).
     # The un-checkpointed plan measured slower on 4 cores (PERFORMANCE.md
     # decision 9).
-    oriented = with_deg.select(
+    oriented = checkpoint(with_deg.select(
         F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("s"),
         F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("t"),
         F.when(u_first, F.col("dv")).otherwise(F.col("du")).alias("td"),
-    ).localCheckpoint(eager=False)
+    ))
     e1 = oriented.alias("e1")
     e2 = oriented.alias("e2")
     e3 = oriented.select(
@@ -472,39 +467,17 @@ def k_core(
     semi-join of edges onto surviving nodes (no broadcast hint — AQE
     promotes the node frame from runtime stats when it is genuinely
     small; a forced hint OOMs on billion-node graphs where the
-    un-hinted plan shuffles instead); the edge frame SHRINKS
-    monotonically and is
-    localCheckpoint'd per iteration — without truncation Catalyst
-    replays the whole (often expensive) upstream edge derivation once
-    per unrolled level, the same trap pagerank documents.
+    un-hinted plan shuffles instead). The loop runs on
+    ``caching.iterate`` with the edge count as its measure: the edge
+    frame SHRINKS monotonically, so a level that drops no edge proves
+    every remaining level is the identity and peeling stops there —
+    exactly the iters-times-peeled subgraph the contract pins, without
+    paying a degree agg + two joins + a checkpoint per no-op level.
     """
     if k < 1:
         raise ValueError("k must be >= 1")
-    from pyspark.sql import Observation
 
-    obs0 = Observation("__kcore_n0")
-    e = (
-        edges.where(F.col(src_col) != F.col(dst_col))
-        .select(
-            F.least(F.col(src_col), F.col(dst_col)).alias("u"),
-            F.greatest(F.col(src_col), F.col(dst_col)).alias("v"),
-        )
-        .distinct()
-        .observe(obs0, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint()
-    )
-    # Early exit at the peeling FIXPOINT (round-11, the CC observe()
-    # pattern): the edge set shrinks monotonically, so an iteration that
-    # drops zero edges proves every surviving degree is already >= k and
-    # ALL remaining iterations are the identity — the result is exactly
-    # the iters-times-peeled subgraph the contract pins, without paying
-    # degree-agg + two joins + a checkpoint per no-op level. The edge
-    # count rides each checkpoint's own materialization job as an
-    # observe() metric (no extra action).
-    prev_n = obs0.get["n"] or 0
-    for it in range(iters):
-        if prev_n == 0:
-            break
+    def peel(e: DataFrame) -> DataFrame:
         deg = (
             e.select(F.explode(F.array("u", "v")).alias("node"))
             .groupBy("node")
@@ -513,18 +486,19 @@ def k_core(
         )
         nu = deg.select(F.col("node").alias("u"))
         nv = deg.select(F.col("node").alias("v"))
-        obs = Observation(f"__kcore_{id(edges)}_{it}")
-        e = (
-            e.join(nu, "u")
-            .join(nv, "v")
-            .select("u", "v")
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint()
+        return e.join(nu, "u").join(nv, "v").select("u", "v")
+
+    e, _ = iterate(
+        edges.where(F.col(src_col) != F.col(dst_col))
+        .select(
+            F.least(F.col(src_col), F.col(dst_col)).alias("u"),
+            F.greatest(F.col(src_col), F.col(dst_col)).alias("v"),
         )
-        n = obs.get["n"] or 0
-        if n == prev_n:
-            break
-        prev_n = n
+        .distinct(),
+        peel,
+        iters,
+        F.count(F.lit(1)),
+    )
     return (
         e.select(F.col("u").alias("node"))
         .unionAll(e.select(F.col("v").alias("node")))
@@ -542,7 +516,7 @@ def k_core_sql(
     duckdb dialect therefore pins every level ``AS MATERIALIZED``
     (measured: the inlined form never finishes at 6 levels; the
     materialized form runs in milliseconds). Spark's dialect omits the
-    keyword (unsupported; the DataFrame path with localCheckpoint is
+    keyword (unsupported; the DataFrame path with its checkpoints is
     the production plan there)."""
     if dialect not in ("spark", "duckdb"):
         raise ValueError(f"unknown dialect: {dialect}")
@@ -599,7 +573,7 @@ def hits_scores(
 
     Scale shape: score frames are node-sized (<< edges); the edges
     frame localCheckpoints once and is scanned twice per iteration;
-    per-iteration localCheckpoints keep plan depth flat exactly as in
+    per-iteration checkpoints keep plan depth flat exactly as in
     pagerank.
     """
     if iters < 1:
@@ -637,11 +611,10 @@ def hits_scores(
         # still persisted ONCE at first compute, but materialization
         # rides the consumers' own jobs instead of one eager action per
         # half-iteration (2*iters fewer job submissions per call).
-        h_raw = (
+        h_raw = checkpoint(
             e.join(a, e.__t == a.node)
             .groupBy("__s")
             .agg(F.sum(F.col("__w") * F.col("score")).alias("hs"))
-            .localCheckpoint(eager=False)
         )
         hn = F.broadcast(
             h_raw.agg(
@@ -651,11 +624,10 @@ def hits_scores(
         h = h_raw.crossJoin(hn).select(
             "__s", (F.col("hs") / F.col("__n")).alias("hs")
         )
-        a_raw = (
+        a_raw = checkpoint(
             e.join(h, "__s")
             .groupBy("__t")
             .agg(F.sum(F.col("__w") * F.col("hs")).alias("as_"))
-            .localCheckpoint(eager=False)
         )
         an = F.broadcast(
             a_raw.agg(

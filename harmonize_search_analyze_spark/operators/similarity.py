@@ -3422,7 +3422,7 @@ def kcenter_select(
     Scale shape: each of the k rounds touches the corpus ONCE with a
     map-only distance-to-newest-center update (running elementwise MIN
     — no pairwise anything) and one TakeOrdered(1) argmax; the state
-    frame (id, vec, min-dist) is localCheckpoint'd per round so the
+    frame (id, vec, min-dist) is checkpointed per round so the
     unrolled lineage never replays. k driver-side 1-row collects are
     the metadata-sized exception every trainer here documents.
     """
@@ -3450,11 +3450,10 @@ def kcenter_select(
         # ONE job instead of two (eager checkpoint + collect). Lineage
         # still truncates at materialization, so round r never replays
         # rounds 1..r-1 — the reason the checkpoint exists.
-        state = (
+        state = checkpoint(
             state.crossJoin(F.broadcast(center))
             .withColumn("mind", F.least(F.col("mind"), d2))
             .drop("cvec")
-            .localCheckpoint(eager=False)
         )
         nxt = (
             state.where(~F.col(id_col).isin([p[1] for p in picked]))

@@ -3,6 +3,7 @@
 An intermediate an operator stores for its lazy plan must stay stored for
 as long as any plan reads it, including frames the query or the caller
 derives from the operator's result after the result itself is dropped.
+``release`` frees every checkpoint an operator made, its loops' included.
 The source guard keeps that one mechanism the only one in the operators.
 """
 
@@ -17,6 +18,8 @@ import pytest
 from pyspark.sql import functions as F
 
 import __spark_entry__
+from harmonize_search_analyze_spark.functions.caching import release
+from harmonize_search_analyze_spark.operators import analytics, dedup, graph
 from harmonize_search_analyze_spark.operators.similarity import (
     embedding_near_dup_lsh,
 )
@@ -60,13 +63,78 @@ def test_derived_frame_keeps_the_checkpoint(spark):
     assert _reads_stored(ids)
 
 
+def _edges(spark):
+    # i -> i+1, i+2, i+3 (mod 8): degree 6, with triangles; nodes 8 and 9
+    # hang off it with degree 1, so k_core peels
+    ring = spark.range(24).select(
+        (F.col("id") % 8).alias("src"),
+        ((F.col("id") % 8 + F.floor(F.col("id") / 8) + 1) % 8).alias("dst"),
+    )
+    return ring.unionByName(
+        spark.range(8, 10).select(
+            F.col("id").alias("src"), (F.col("id") - 8).alias("dst")
+        )
+    )
+
+
+# operators whose loops or intermediates store checkpoints, on small inputs
+RELEASED = {
+    "pagerank": lambda s: graph.pagerank(_edges(s)),
+    "k_core": lambda s: graph.k_core(_edges(s), k=3),
+    "triangle_count": lambda s: graph.triangle_count(_edges(s)),
+    "markov_stationary": lambda s: analytics.markov_stationary(
+        s.range(40).select(
+            (F.col("id") % 4).alias("user"),
+            F.col("id").alias("ts"),
+            (F.col("id") * 7 % 3).alias("event"),
+            F.col("id").alias("event_id"),
+        ),
+        "user", "ts", "event",
+    ),
+    "connected_components": lambda s: dedup.connected_components(
+        s.range(12).select(
+            F.col("id").alias("id1"), (F.col("id") + 1).alias("id2")
+        )
+    ),
+    "graph_explore": lambda s: graph.graph_explore(
+        s.range(20).select(
+            F.col("id").alias("doc_id"),
+            F.concat_ws(" ", F.lit("seed"), (F.col("id") % 5).cast("string"),
+                        (F.col("id") % 3 + 10).cast("string")).alias("text"),
+        ),
+        "text", "seed", min_doc_count=1,
+    ),
+}
+
+
+def _stored(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+
+
+@pytest.mark.parametrize("name", sorted(RELEASED))
+def test_release_frees_every_checkpoint_the_operator_made(spark, name):
+    # the ContextCleaner only ever removes entries, so whatever is stored
+    # after release and was not before is the operator's leak
+    before = _stored(spark)
+    out = RELEASED[name](spark)
+    assert out.collect()
+    release(out)
+    assert _stored(spark) <= before
+
+
 @pytest.mark.parametrize("path", sorted(OPERATORS.glob("*.py")),
                          ids=lambda p: p.name)
 def test_operators_use_one_lifetime_mechanism(path):
     src = path.read_text()
     # the per-site A/B kept no scoped persist (PERFORMANCE.md decision 10)
     assert not re.search(r"\btether|\btransfer\(|\.persist\(|\.cache\(\)", src)
+    # a raw lazy checkpoint is one release cannot free
+    assert "localCheckpoint(eager=False)" not in src
+    # fixpoints are caching.iterate's; Observation stays only for metrics
+    if path.name in ("dedup.py", "graph.py"):
+        assert "Observation" not in src
     for node in ast.walk(ast.parse(src)):
         if (isinstance(node, ast.ImportFrom) and node.module
                 == "harmonize_search_analyze_spark.functions.caching"):
-            assert {a.name for a in node.names} <= {"checkpoint", "release"}
+            assert ({a.name for a in node.names}
+                    <= {"checkpoint", "iterate", "release"})

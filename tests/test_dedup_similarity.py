@@ -347,8 +347,11 @@ def test_connected_components_chain_and_islands(spark):
 
 
 def test_connected_components_long_chain_converges(spark):
-    """A 12-node path needs multiple propagation rounds; the fixpoint must
-    still be the global min id, and a too-small max_iters raises."""
+    """A 13-node path needs multiple propagation rounds; the fixpoint must
+    still be the global min id, and a too-small max_iters raises. An
+    n-node path takes n - 1 steps to carry the min label to its far end
+    and one more to see nothing change: it converges at max_iters=n and
+    raises at n - 1, for either parity of n."""
     import pytest
 
     from harmonize_search_analyze_spark.operators.dedup import (
@@ -363,6 +366,28 @@ def test_connected_components_long_chain_converges(spark):
     assert set(out.values()) == {0}
     with pytest.raises(RuntimeError, match="converge"):
         connected_components(pairs, max_iters=2)
+    for n in (12, 13):
+        path = spark.createDataFrame(
+            [(i, i + 1) for i in range(n - 1)], "id1 long, id2 long"
+        )
+        labels = connected_components(path, max_iters=n).collect()
+        assert sorted(r["id"] for r in labels) == list(range(n))
+        assert {r["cluster_id"] for r in labels} == {0}
+        with pytest.raises(RuntimeError, match="converge"):
+            connected_components(path, max_iters=n - 1)
+
+
+def test_connected_components_rejects_non_integral_ids(spark):
+    # the fixpoint test sums labels exactly, which only integral ids allow
+    import pytest
+
+    from harmonize_search_analyze_spark.operators.dedup import (
+        connected_components,
+    )
+
+    pairs = spark.createDataFrame([("a", "b")], "id1 string, id2 string")
+    with pytest.raises(TypeError, match="integral"):
+        connected_components(pairs)
 
 
 def test_line_dedup_keeps_first_occurrence(spark):
