@@ -2,9 +2,13 @@
 
 ``checkpoint(df)`` is a lazy ``localCheckpoint``: the first action that reads
 it fills it, and it lives while any plan reads it, frames derived from the
-operator's result included. Spark's ``ContextCleaner`` frees it seconds after
-the JVM collects the last such plan; ``release``/``scoped`` free it eagerly.
-It does not survive the loss of the executor that holds it.
+operator's result included. ``checkpoint(df, eager=True)`` fills it now, in a
+job of its own, for a frame that driver code collects from or that several
+later jobs read. Spark's ``ContextCleaner`` frees a checkpoint
+seconds after the JVM collects the last plan that reads it;
+``release``/``scoped`` free it eagerly. Every checkpoint in ``operators/``,
+lazy or eager, is made here, so ``release`` frees all of them. A checkpoint
+does not survive the loss of the executor that holds it.
 
 ``iterate(state, step, iters, measure=None)`` is the one driver for an
 operator loop over a frame. It registers its checkpoints as ``checkpoint``
@@ -60,14 +64,10 @@ def _rdd_ids(df: DataFrame) -> list[int]:
             if lf.getClass().getSimpleName() == "LogicalRDD"]
 
 
-def _store(df: DataFrame, eager: bool) -> DataFrame:
+def checkpoint(df: DataFrame, eager: bool = False) -> DataFrame:
     out = df.localCheckpoint(eager=eager)
     _MADE[_rdd_ids(out)[0]] = [i for i in _rdd_ids(df) if i in _MADE]
     return out
-
-
-def checkpoint(df: DataFrame) -> DataFrame:
-    return _store(df, eager=False)
 
 
 def iterate(state: DataFrame, step: Callable[[DataFrame], DataFrame],
@@ -81,7 +81,7 @@ def iterate(state: DataFrame, step: Callable[[DataFrame], DataFrame],
 
     def observed(df: DataFrame):
         obs = Observation()
-        return _store(df.observe(obs, measure.alias("m")), eager=True), obs
+        return checkpoint(df.observe(obs, measure.alias("m")), eager=True), obs
 
     state, obs = observed(state)
     for _ in range(iters):

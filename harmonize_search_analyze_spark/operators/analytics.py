@@ -1177,11 +1177,11 @@ def skew_report(
     # key-count frame: built once, consumed twice (summary + output) —
     # localCheckpoint so the raw scan doesn't run twice; the frame is
     # key-cardinality-sized, never row-sized
-    counts = df.groupBy(
+    counts = checkpoint(df.groupBy(
         F.coalesce(F.col(key_col).cast("string"), F.lit("<null>")).alias(
             "key"
         )
-    ).agg(F.count(F.lit(1)).alias("n")).localCheckpoint()
+    ).agg(F.count(F.lit(1)).alias("n")), eager=True)
     # the summary is ONE map-combinable agg + a broadcast back — NOT a
     # whole-frame window (which would move every key count to a single
     # task; key spaces at 100 TB are themselves large). Entropy

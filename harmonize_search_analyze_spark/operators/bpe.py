@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from harmonize_search_analyze_spark.functions.caching import checkpoint
 from harmonize_search_analyze_spark.operators.text import tokens_sql
 
 EOW = "</w>"
@@ -127,12 +128,12 @@ def bpe_train(
             for r in words.orderBy("word").collect()
         ]
         return _train_local(rows, n_merges, min_pair_count)
-    syms = words.select(
+    syms = checkpoint(words.select(
         "weight",
         F.expr(
             f"concat(split(word, ''), array('{EOW}'))"
         ).alias("syms"),
-    ).localCheckpoint(eager=True)
+    ), eager=True)
     merges: list[tuple[str, str]] = []
     for _ in range(n_merges):
         pairs = (
@@ -166,9 +167,9 @@ def bpe_train(
             f"AND s = '{rb}' THEN concat(slice(acc, 1, size(acc) - 1), "
             f"array('{la}{rb}')) ELSE concat(acc, array(s)) END)"
         )
-        syms = syms.select(
+        syms = checkpoint(syms.select(
             "weight", F.expr(merge_expr).alias("syms")
-        ).localCheckpoint(eager=True)
+        ), eager=True)
     return merges
 
 

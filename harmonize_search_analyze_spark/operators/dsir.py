@@ -46,6 +46,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from harmonize_search_analyze_spark.functions.caching import checkpoint
 from harmonize_search_analyze_spark.functions.hashing import hash64_sql
 from harmonize_search_analyze_spark.operators.text import ngrams_sql
 
@@ -173,7 +174,7 @@ def dsir_weights(
     # keeps AQE coalescing for the consumers (the r10-documented
     # cached-plan trap). The lazy persist measured slower on 4 cores
     # too (PERFORMANCE.md decision 9).
-    bucketed = docs.select(
+    bucketed = checkpoint(docs.select(
         F.col(doc_id).alias("__id"),
         F.expr(target_pred).cast("int").alias("__is_tgt"),
         F.explode(F.expr(_grams_sql(text_col, "spark"))).alias("__gram"),
@@ -181,7 +182,7 @@ def dsir_weights(
         "__id",
         "__is_tgt",
         F.expr(_bucket_sql("__gram", "spark", m)).alias("bucket"),
-    ).localCheckpoint(eager=True)
+    ), eager=True)
     per_bucket = bucketed.groupBy("bucket").agg(
         F.sum("__is_tgt").alias("__t"),
         F.count(F.lit(1)).alias("__r"),

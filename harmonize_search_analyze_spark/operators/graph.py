@@ -583,16 +583,16 @@ def hits_scores(
         if weight_col
         else F.lit(1.0)
     )
-    e = edges.select(
+    e = checkpoint(edges.select(
         F.col(src_col).alias("__s"),
         F.col(dst_col).alias("__t"),
         w.alias("__w"),
-    ).localCheckpoint()
-    nodes = (
+    ), eager=True)
+    nodes = checkpoint(
         e.select(F.col("__s").alias("node"))
         .union(e.select(F.col("__t").alias("node")))
-        .distinct()
-        .localCheckpoint()
+        .distinct(),
+        eager=True,
     )
     a = nodes.select("node", F.lit(1.0).alias("score"))
     h = None

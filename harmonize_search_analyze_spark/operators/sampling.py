@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from harmonize_search_analyze_spark.functions.caching import checkpoint
 from harmonize_search_analyze_spark.functions.hashing import hash64_sql
 
 HASH_BUCKETS = 1_000_000
@@ -1270,14 +1271,14 @@ def ipf_weights(
     """
     if iters < 1:
         raise ValueError("iters must be >= 1")
-    cells = (
+    cells = checkpoint(
         df.where(F.col(row_col).isNotNull() & F.col(col_col).isNotNull())
         .groupBy(
             F.col(row_col).cast("string").alias("__rk"),
             F.col(col_col).cast("string").alias("__ck"),
         )
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .localCheckpoint()
+        .agg(F.count(F.lit(1)).alias("__n")),
+        eager=True,
     )
 
     def _target_map(targets: dict[str, float] | None, key: str):

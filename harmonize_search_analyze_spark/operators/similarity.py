@@ -19,11 +19,71 @@ bit-reproducible against the DuckDB oracle.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, GroupedData, Window
 from pyspark.sql import functions as F
 
 from harmonize_search_analyze_spark.functions.caching import checkpoint
 from harmonize_search_analyze_spark.sources.tables import local_frame
+
+
+def _matrix(batch, name: str):
+    """Column ``name`` of an Arrow batch or table, a list per row, as an
+    ``(n, d)`` float64 matrix: a zero-copy view of a null-free double
+    column. ``list_flatten`` and not ``.values``, which ignores a sliced
+    batch's offset. A null or ragged row raises ``ValueError``, where a
+    bare reshape would take ragged rows whose lengths sum to ``n * d``."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    col = batch.column(name)
+    lens = pc.list_value_length(col)
+    d = pc.max(lens).as_py() or 0
+    if col.null_count or pc.min(lens).as_py() not in (None, d):
+        raise ValueError(f"{name}: vectors must be non-null, of one length")
+    flat = np.asarray(pc.list_flatten(col)).astype(np.float64, copy=False)
+    return flat.reshape(len(col), d)
+
+
+def _vector_map(frame, fn, ddl: str) -> DataFrame:
+    """The numpy operators' one Arrow stage: ``mapInArrow`` over a frame's
+    non-empty batches, or ``applyInArrow`` over a ``groupBy``'s groups.
+    ``fn(batch)`` returns a dict of columns, built to ``ddl``'s Arrow
+    schema: Arrow columns pass through zero-copy, a 2-D array becomes a
+    list per row, and NaN becomes null, as the pandas conversion made it."""
+    import numpy as np
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    schema = to_arrow_schema(StructType.fromDDL(ddl))
+
+    def arrow(v, t):
+        if isinstance(v, pa.Array):
+            return v if v.type == t else v.cast(t)
+        v = np.asarray(v)
+        if v.ndim == 1:
+            return pa.array(v, t, from_pandas=True)
+        n, d = v.shape
+        return pa.ListArray.from_arrays(
+            pa.array(np.arange(n + 1, dtype=np.int32) * d),
+            pa.array(v.ravel(), t.value_type, from_pandas=True), type=t,
+        )
+
+    def build(batch):
+        cols = fn(batch)
+        return pa.Table.from_arrays(
+            [arrow(cols[f.name], f.type) for f in schema], schema=schema
+        )
+
+    if isinstance(frame, GroupedData):
+        return frame.applyInArrow(build, ddl)
+
+    def run(batches):
+        for batch in batches:
+            if batch.num_rows:
+                yield from build(batch).to_batches()
+
+    return frame.mapInArrow(run, ddl)
 
 
 def _dot_sql(a: str, b: str) -> str:
@@ -138,11 +198,11 @@ def _assign_literal(
     keep_vec: bool = False,
 ) -> DataFrame:
     """Argmin-L2 assignment against driver-resident centroid rows (sorted
-    (centroid_id, vector) tuples), as ONE map-only Arrow stage: the
-    KB-sized centroid matrix ships in the task closure and each batch is a
-    vectorized numpy distance computation (n x C x dim in C, not Python).
+    (centroid_id, vector) tuples), as ONE map-only ``_vector_map`` stage:
+    the KB-sized centroid matrix ships in the task closure and each Arrow
+    batch is one numpy distance computation (n x C x dim in C, not Python).
 
-    This is the one place a Pandas-batch stage beats every relational
+    This is the one place an Arrow-batch numpy stage beats every relational
     encoding, measured: a crossJoin+window argmin explodes rows x C and
     shuffles (~15s for the gated query); inlining per-centroid literal
     distance expressions hits Catalyst's giant-expression-tree analysis
@@ -157,7 +217,6 @@ def _assign_literal(
     if not crows:
         raise ValueError("centroids is empty")
     import numpy as np
-    import pandas as pd
 
     cmat = np.asarray([c for _, c in crows], dtype=np.float64)
     cids = np.asarray([cid for cid, _ in crows], dtype=np.int32)
@@ -166,32 +225,23 @@ def _assign_literal(
         ", dvec array<double>" if keep_vec else ""
     )
 
-    def assign(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            x = np.vstack(pdf["dvec"].to_numpy())
-            # |x-c|^2 = |x|^2 + |c|^2 - 2 x.c ; clip fp negatives at 0
-            d2 = (
-                (x * x).sum(axis=1)[:, None]
-                + c_sq[None, :]
-                - 2.0 * (x @ cmat.T)
-            )
-            d2 = np.round(np.maximum(d2, 0.0), 6)
-            j = d2.argmin(axis=1)
-            out = {
-                id_col: pdf[id_col].to_numpy(),
-                "centroid_id": cids[j],
-                "d2": d2[np.arange(len(j)), j],
-            }
-            if keep_vec:
-                out["dvec"] = pdf["dvec"]
-            yield pd.DataFrame(out)
+    def assign(batch):
+        x = _matrix(batch, "dvec")
+        # |x-c|^2 = |x|^2 + |c|^2 - 2 x.c ; clip fp negatives at 0
+        d2 = (x * x).sum(axis=1)[:, None] + c_sq[None, :] - 2.0 * (x @ cmat.T)
+        d2 = np.round(np.maximum(d2, 0.0), 6)
+        j = d2.argmin(axis=1)
+        return {
+            id_col: batch.column(id_col),
+            "centroid_id": cids[j],
+            "d2": d2[np.arange(len(j)), j],
+            "dvec": batch.column("dvec"),
+        }
 
     vecs = df.select(
         id_col, F.col(vec_col).cast("array<double>").alias("dvec")
     )
-    return vecs.mapInPandas(assign, out_schema)
+    return _vector_map(vecs, assign, out_schema)
 
 
 def _collect_centroids(centroids: DataFrame) -> list[tuple[int, list[float]]]:
@@ -211,7 +261,7 @@ def assign_centroids(
 ) -> DataFrame:
     """Argmin-L2 assignment of every vector to a centroid. The centroid
     table is METADATA-sized (C x dim doubles, a few KB) so it is collected
-    and shipped in the closure of one vectorized Arrow stage — see
+    and shipped in the closure of one ``_vector_map`` stage — see
     ``_assign_literal`` for the scale argument.
 
     Ties break to the lowest centroid_id (distances rounded to 6 decimals
@@ -550,7 +600,7 @@ def embedding_near_dup_lsh(
     recall < 1 by construction — the brute operator is the oracle for recall,
     while THIS operator is oracle'd exactly (same planes, same buckets).
 
-    Scale shape: signature computation is ONE vectorized Arrow stage — the
+    Scale shape: signature computation is ONE ``_vector_map`` stage — the
     n_bits x dim plane matrix ships in the task closure and each batch is a
     single numpy matmul + sign, exactly the assign_centroids design. The
     per-bit interpreted higher-order-function folds this replaces cost
@@ -576,57 +626,44 @@ def embedding_near_dup_lsh(
     )
     pow2 = 2 ** np.arange(bits_per_band, dtype=np.int64)
 
-    def sig(batches):
-        import pandas as pd
+    def sig(batch):
+        x = _matrix(batch, "v")
+        bits = (x @ planes_mat.T) >= 0.0          # n x n_bits
+        keys = [
+            bits[:, bi * bits_per_band:(bi + 1) * bits_per_band] @ pow2
+            for bi in range(n_bands)
+        ]
+        return {
+            id_col: batch.column(id_col),
+            "v": batch.column("v"),
+            "nrm": np.sqrt((x * x).sum(axis=1)),
+            "keys": np.column_stack(keys),
+        }
 
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            x = np.vstack(pdf["v"].to_numpy())
-            bits = (x @ planes_mat.T) >= 0.0          # n x n_bits
-            keys = [
-                bits[:, bi * bits_per_band:(bi + 1) * bits_per_band] @ pow2
-                for bi in range(n_bands)
-            ]
-            yield pd.DataFrame({
-                id_col: pdf[id_col],
-                "v": pdf["v"],
-                "nrm": np.sqrt((x * x).sum(axis=1)),
-                "keys": list(np.column_stack(keys)),
-            })
-
-    sig_df = checkpoint(df.select(
-        id_col, F.col(vec_col).cast("array<double>").alias("v")
-    ).mapInPandas(
-        sig, f"{id_col} long, v array<double>, nrm double, keys array<long>"
+    sig_df = checkpoint(_vector_map(
+        df.select(id_col, F.col(vec_col).cast("array<double>").alias("v")),
+        sig, f"{id_col} long, v array<double>, nrm double, keys array<long>",
     ))
     cands = band_join(band_frame(sig_df, id_col, "keys"))
 
-    def verify(batches):
-        import pandas as pd
+    def verify(batch):
+        c = np.round(
+            (_matrix(batch, "v1") * _matrix(batch, "v2")).sum(axis=1)
+            / (batch.column("n1").to_numpy() * batch.column("n2").to_numpy()),
+            6,
+        )
+        m = c >= threshold
+        return {
+            "id1": batch.column("id1").to_numpy()[m],
+            "id2": batch.column("id2").to_numpy()[m],
+            "cosine": c[m],
+        }
 
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            v1 = np.vstack(pdf["v1"].to_numpy())
-            v2 = np.vstack(pdf["v2"].to_numpy())
-            c = np.round(
-                (v1 * v2).sum(axis=1)
-                / (pdf["n1"].to_numpy() * pdf["n2"].to_numpy()),
-                6,
-            )
-            m = c >= threshold
-            yield pd.DataFrame({
-                "id1": pdf["id1"].to_numpy()[m],
-                "id2": pdf["id2"].to_numpy()[m],
-                "cosine": c[m],
-            })
-
-    # verify is the same vectorized-Arrow shape as the signature stage:
+    # verify is the same Arrow vector stage as the signature stage:
     # the candidate join shuffles (pair, vectors) once, then cosine+filter
     # is map-only numpy (6-dec rounding parity vs the fold measured: zero
     # disagreements over ALL 4M sf0.1 pairs; the oracle keeps the fold).
-    out = (
+    pairs = (
         cands.join(
             sig_df.select(F.col(id_col).alias("id1"), F.col("v").alias("v1"),
                           F.col("nrm").alias("n1")), "id1")
@@ -634,9 +671,8 @@ def embedding_near_dup_lsh(
             sig_df.select(F.col(id_col).alias("id2"), F.col("v").alias("v2"),
                           F.col("nrm").alias("n2")), "id2")
         .select("id1", "id2", "v1", "v2", "n1", "n2")
-        .mapInPandas(verify, "id1 long, id2 long, cosine double")
     )
-    return out
+    return _vector_map(pairs, verify, "id1 long, id2 long, cosine double")
 
 
 def similarity_join(
@@ -790,7 +826,7 @@ def similarity_join_ivf(
     broadcasts; the corpus joins it on centroid_id map-side — at scale,
     with assignments written partitioned by centroid_id, that join is
     partition pruning, and the corpus never shuffles. Candidate cosines
-    run as one vectorized Arrow stage (numpy parity vs the fold verified:
+    run as one ``_vector_map`` stage (numpy parity vs the fold verified:
     zero 6-decimal disagreements over all sf0.1 pairs); per-query top-k is
     a rank window over candidate scores only.
 
@@ -851,28 +887,22 @@ def similarity_join_ivf(
         .select("query_id", "corpus_id", "cv", "qv")
     )
 
-    def score(batches):
-        import pandas as pd
+    def score(batch):
+        cv, qv = _matrix(batch, "cv"), _matrix(batch, "qv")
+        cos = np.round(
+            (cv * qv).sum(axis=1)
+            / (np.sqrt((cv * cv).sum(axis=1))
+               * np.sqrt((qv * qv).sum(axis=1))),
+            6,
+        )
+        return {
+            "query_id": batch.column("query_id"),
+            "corpus_id": batch.column("corpus_id"),
+            "cosine": cos,
+        }
 
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            cv = np.vstack(pdf["cv"].to_numpy())
-            qv = np.vstack(pdf["qv"].to_numpy())
-            cos = np.round(
-                (cv * qv).sum(axis=1)
-                / (np.sqrt((cv * cv).sum(axis=1))
-                   * np.sqrt((qv * qv).sum(axis=1))),
-                6,
-            )
-            yield pd.DataFrame({
-                "query_id": pdf["query_id"],
-                "corpus_id": pdf["corpus_id"],
-                "cosine": cos,
-            })
-
-    scored = cand.mapInPandas(
-        score, "query_id long, corpus_id long, cosine double"
+    scored = _vector_map(
+        cand, score, "query_id long, corpus_id long, cosine double"
     )
     w = Window.partitionBy("query_id").orderBy(
         F.desc("cosine"), F.asc("corpus_id")
@@ -1253,42 +1283,33 @@ def embedding_near_dup_pairs(
     — the DuckDB oracle keeps the fold formulation)."""
     import numpy as np
 
-    gathered = df.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).cast("array<double>").alias("v"),
-    ).toPandas()
-    if len(gathered) > max_rows:
-        raise ValueError(
-            f"brute near-dup is a recall oracle for samples; got "
-            f"{len(gathered)} rows > max_rows={max_rows} — use "
-            "embedding_near_dup_lsh for full-corpus runs"
-        )
-    ids = gathered["id"].to_numpy()
-    mat = np.vstack(gathered["v"].to_numpy())
-    nrm = np.sqrt((mat * mat).sum(axis=1))
-
-    def block(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            x = np.vstack(pdf["v"].to_numpy())
-            xn = np.sqrt((x * x).sum(axis=1))
-            xid = pdf["id"].to_numpy()
-            cos = np.round((x @ mat.T) / np.outer(xn, nrm), 6)
-            keep = (cos >= threshold) & (xid[:, None] < ids[None, :])
-            i, j = np.nonzero(keep)
-            yield pd.DataFrame(
-                {"id1": xid[i], "id2": ids[j], "cosine": cos[i, j]}
-            )
-
-    parallelism = df.sparkSession.sparkContext.defaultParallelism
     src = df.select(
         F.col(id_col).alias("id"),
         F.col(vec_col).cast("array<double>").alias("v"),
-    ).repartition(parallelism)
-    return src.mapInPandas(block, "id1 long, id2 long, cosine double")
+    )
+    gathered = src.toArrow()
+    if gathered.num_rows > max_rows:
+        raise ValueError(
+            f"brute near-dup is a recall oracle for samples; got "
+            f"{gathered.num_rows} rows > max_rows={max_rows} — use "
+            "embedding_near_dup_lsh for full-corpus runs"
+        )
+    ids = gathered.column("id").to_numpy()
+    mat = _matrix(gathered, "v")
+    nrm = np.sqrt((mat * mat).sum(axis=1))
+
+    def block(batch):
+        x = _matrix(batch, "v")
+        xn = np.sqrt((x * x).sum(axis=1))
+        xid = batch.column("id").to_numpy()
+        cos = np.round((x @ mat.T) / np.outer(xn, nrm), 6)
+        keep = (cos >= threshold) & (xid[:, None] < ids[None, :])
+        i, j = np.nonzero(keep)
+        return {"id1": xid[i], "id2": ids[j], "cosine": cos[i, j]}
+
+    parallelism = df.sparkSession.sparkContext.defaultParallelism
+    return _vector_map(src.repartition(parallelism), block,
+                       "id1 long, id2 long, cosine double")
 
 
 # -- product quantization ----------------------------------------------------
@@ -1383,7 +1404,6 @@ def pq_encode(
     (see _assign_literal), which is what lets the DuckDB oracle replay the
     encode exactly with a fold-ordered L2."""
     import numpy as np
-    import pandas as pd
 
     books = _collect_codebooks(codebooks)
     m = len(books)
@@ -1391,25 +1411,20 @@ def pq_encode(
     cids = [books[j][0] for j in range(m)]
     d = mats[0].shape[1]
 
-    def encode(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            x = np.vstack(pdf["dvec"].to_numpy())
-            xr = x.reshape(len(x), m, d)
-            codes = np.empty((len(x), m), dtype=np.int32)
-            for j in range(m):
-                diff = xr[:, j, None, :] - mats[j][None, :, :]
-                d2 = np.round((diff * diff).sum(axis=-1), 6)
-                codes[:, j] = cids[j][d2.argmin(axis=1)]
-            yield pd.DataFrame(
-                {id_col: pdf[id_col].to_numpy(), "codes": list(codes)}
-            )
+    def encode(batch):
+        x = _matrix(batch, "dvec")
+        xr = x.reshape(len(x), m, d)
+        codes = np.empty((len(x), m), dtype=np.int32)
+        for j in range(m):
+            diff = xr[:, j, None, :] - mats[j][None, :, :]
+            d2 = np.round((diff * diff).sum(axis=-1), 6)
+            codes[:, j] = cids[j][d2.argmin(axis=1)]
+        return {id_col: batch.column(id_col), "codes": codes}
 
     vecs = df.select(
         id_col, F.col(vec_col).cast("array<double>").alias("dvec")
     )
-    return vecs.mapInPandas(encode, f"{id_col} long, codes array<int>")
+    return _vector_map(vecs, encode, f"{id_col} long, codes array<int>")
 
 
 def pq_train(
@@ -1431,7 +1446,6 @@ def pq_train(
     driver collect, exactly like kmeans_train. Empty cells keep their
     previous centroid. Deterministic end to end."""
     import numpy as np
-    import pandas as pd
 
     if ref_ids is None:
         ref_ids = [
@@ -1459,26 +1473,24 @@ def pq_train(
         mats = {j: bk[j][1] for j in bk}
         cids = {j: bk[j][0] for j in bk}
 
-        def assign(batches):
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                out_cid = np.empty(len(pdf), dtype=np.int32)
-                sv = np.vstack(pdf["subvec"].to_numpy())
-                js = pdf["subspace"].to_numpy()
-                for j in np.unique(js):
-                    mask = js == j
-                    diff = sv[mask][:, None, :] - mats[j][None, :, :]
-                    d2 = np.round((diff * diff).sum(axis=-1), 6)
-                    out_cid[mask] = cids[j][d2.argmin(axis=1)]
-                yield pd.DataFrame({
-                    "subspace": js, "centroid_id": out_cid,
-                    "subvec": pdf["subvec"],
-                })
+        def assign(batch):
+            out_cid = np.empty(batch.num_rows, dtype=np.int32)
+            sv = _matrix(batch, "subvec")
+            js = batch.column("subspace").to_numpy()
+            for j in np.unique(js):
+                mask = js == j
+                diff = sv[mask][:, None, :] - mats[j][None, :, :]
+                d2 = np.round((diff * diff).sum(axis=-1), 6)
+                out_cid[mask] = cids[j][d2.argmin(axis=1)]
+            return {
+                "subspace": batch.column("subspace"),
+                "centroid_id": out_cid,
+                "subvec": batch.column("subvec"),
+            }
 
         means = (
-            sub.mapInPandas(
-                assign,
+            _vector_map(
+                sub, assign,
                 "subspace int, centroid_id int, subvec array<double>",
             )
             .select(
@@ -1797,7 +1809,7 @@ def semantic_dedup(
     )
 
     # centroid seeds via ivf_assign's deterministic id-hash construction,
-    # but assignment through the vectorized Arrow stage (map-only) — the
+    # but assignment through the ``_vector_map`` stage (map-only) — the
     # crossJoin+window argmin it replaces is the measured-slow relational
     # shape (see _assign_literal), and both honor the same rounded-6 /
     # lowest-centroid tie contract the oracle replays.
@@ -1818,7 +1830,6 @@ def semantic_dedup(
     # second df scan onto (id, centroid_id) — one extra scan + one
     # id-keyed exchange per run; dvec is byte-identical either way).
     import numpy as np
-    import pandas as pd
 
     clustered = assign_centroids(
         df, centroids, vec_col=vec_col, id_col=id_col, keep_vec=True
@@ -1827,22 +1838,20 @@ def semantic_dedup(
     # per-cluster cosine block as ONE numpy matmul per group (the
     # engine's measured fold->matmul win, embedding_near_dup_pairs:
     # 6-decimal parity vs the oracle's fold verified over all sf0.1
-    # pairs). applyInPandas shuffles once on centroid_id — the same
+    # pairs). applyInArrow shuffles once on centroid_id — the same
     # exchange the within-cluster equi-join would pay, minus the
     # interpreted per-pair dot products.
-    def cluster_pairs(_key, pdf):
-        if len(pdf) < 2:
-            return pd.DataFrame({"id1": [], "id2": []}).astype("int64")
-        mat = np.vstack(pdf["dvec"].to_numpy())
-        ids = pdf[id_col].to_numpy()
+    def cluster_pairs(group):
+        mat = _matrix(group, "dvec")
+        ids = group.column(id_col).to_numpy()
         nrm = np.sqrt((mat * mat).sum(axis=1))
         cos = np.round((mat @ mat.T) / np.outer(nrm, nrm), 6)
         keep = (cos >= threshold) & (ids[:, None] < ids[None, :])
         i, j = np.nonzero(keep)
-        return pd.DataFrame({"id1": ids[i], "id2": ids[j]})
+        return {"id1": ids[i], "id2": ids[j]}
 
-    pairs = clustered.groupBy("centroid_id").applyInPandas(
-        cluster_pairs, "id1 long, id2 long"
+    pairs = _vector_map(
+        clustered.groupBy("centroid_id"), cluster_pairs, "id1 long, id2 long"
     )
     labels = connected_components(pairs)
     return (
@@ -3171,30 +3180,25 @@ def embedding_gram_partials(df: DataFrame, vec_col: str, d: int):
     side merges ~num_partitions metadata-sized rows, never the vectors.
     """
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
     def partial(batches):
         n = 0
         s = np.zeros(d, dtype=np.float64)
         g = np.zeros((d, d), dtype=np.float64)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            x = np.vstack(pdf["dvec"].to_numpy()).astype(np.float64)
+        for x in (_matrix(b, "dvec") for b in batches if b.num_rows):
             n += x.shape[0]
             s += x.sum(axis=0)
             g += x.T @ x
         if n:
-            yield pd.DataFrame(
+            yield pa.RecordBatch.from_pydict(
                 {"n": [n], "s": [s.tolist()], "g": [g.ravel().tolist()]}
             )
 
     vecs = df.where(F.col(vec_col).isNotNull()).select(
         F.col(vec_col).cast("array<double>").alias("dvec")
     )
-    return vecs.mapInPandas(
-        partial, "n long, s array<double>, g array<double>"
-    )
+    return vecs.mapInArrow(partial, "n long, s array<double>, g array<double>")
 
 
 def embedding_covariance(
@@ -3321,7 +3325,6 @@ def embedding_pca(
     itself is the rows-only trainer-shaped remainder).
     """
     import numpy as np
-    import pandas as pd
 
     parts = embedding_gram_partials(df, vec_col, d).collect()
     if not parts:
@@ -3345,22 +3348,17 @@ def embedding_pca(
         w = w / np.sqrt(np.maximum(evals[order], 1e-12))[None, :]
     mean_b = mean.copy()
 
-    def project(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            x = np.vstack(pdf["dvec"].to_numpy()).astype(np.float64)
-            p = np.round((x - mean_b) @ w, 6)
-            yield pd.DataFrame(
-                {id_col: pdf[id_col].to_numpy(),
-                 "components": list(p.tolist())}
-            )
+    def project(batch):
+        return {
+            id_col: batch.column(id_col),
+            "components": np.round((_matrix(batch, "dvec") - mean_b) @ w, 6),
+        }
 
     vecs = df.where(F.col(vec_col).isNotNull()).select(
         id_col, F.col(vec_col).cast("array<double>").alias("dvec")
     )
-    return vecs.mapInPandas(
-        project, f"{id_col} long, components array<double>"
+    return _vector_map(
+        vecs, project, f"{id_col} long, components array<double>"
     )
 
 

@@ -35,6 +35,7 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from harmonize_search_analyze_spark.functions.caching import checkpoint
 from harmonize_search_analyze_spark.operators.bpe import _word_counts
 
 
@@ -179,7 +180,7 @@ def unigram_train(
         )
 
     # distributed path: seed + each E-step over the sharded word table
-    words = words.localCheckpoint(eager=True)
+    words = checkpoint(words, eager=True)
     sub = (
         "flatten(transform(sequence(1, length(word)), j -> "
         "transform(sequence(j, least(j + {L} - 1, length(word))), k -> "
@@ -187,13 +188,13 @@ def unigram_train(
     ).format(L=max_piece_len)
     # checkpoint: the chars + multi collects below would otherwise each
     # re-run the all-substrings explode (the most expensive seed stage)
-    seeded = (
+    seeded = checkpoint(
         words.select(
             F.col("weight"), F.explode(F.expr(sub)).alias("piece")
         )
         .groupBy("piece")
-        .agg(F.sum("weight").alias("c"))
-        .localCheckpoint(eager=True)
+        .agg(F.sum("weight").alias("c")),
+        eager=True,
     )
     chars = {
         r["piece"]: int(r["c"])

@@ -96,6 +96,13 @@ RELEASED = {
             F.col("id").alias("id1"), (F.col("id") + 1).alias("id2")
         )
     ),
+    # 10 nodes, i -> 3i+1 (mod 10): eager edge and node checkpoints
+    "hits_scores": lambda s: graph.hits_scores(
+        s.range(20).select(
+            (F.col("id") % 10).alias("src"),
+            ((F.col("id") * 3 + 1) % 10).alias("dst"),
+        )
+    ),
     "graph_explore": lambda s: graph.graph_explore(
         s.range(20).select(
             F.col("id").alias("doc_id"),
@@ -128,8 +135,8 @@ def test_operators_use_one_lifetime_mechanism(path):
     src = path.read_text()
     # the per-site A/B kept no scoped persist (PERFORMANCE.md decision 10)
     assert not re.search(r"\btether|\btransfer\(|\.persist\(|\.cache\(\)", src)
-    # a raw lazy checkpoint is one release cannot free
-    assert "localCheckpoint(eager=False)" not in src
+    # a raw checkpoint, lazy or eager, is one release cannot free
+    assert ".localCheckpoint(" not in src
     # fixpoints are caching.iterate's; Observation stays only for metrics
     if path.name in ("dedup.py", "graph.py"):
         assert "Observation" not in src

@@ -589,3 +589,103 @@ def test_kmeans_train_returns_one_slice_centroids(spark):
     cents = kmeans_train(vecs, n_centroids=4, n_iters=2)
     assert cents.rdd.getNumPartitions() == 1
     assert cents.count() == 4
+
+
+def test_similarity_stages_use_the_arrow_vector_helper():
+    """Every numpy stage in similarity.py goes through ``_vector_map`` and
+    ``_matrix``; the pandas detour and its per-site copies stay out."""
+    import pathlib
+
+    from harmonize_search_analyze_spark.operators import similarity as sm
+
+    src = pathlib.Path(sm.__file__).read_text()
+    for banned in ("np.vstack(", "mapInPandas", "applyInPandas"):
+        assert banned not in src, banned
+
+
+def test_matrix_reads_a_sliced_batch_at_its_offset():
+    import pyarrow as pa
+
+    from harmonize_search_analyze_spark.operators.similarity import _matrix
+
+    rows = [[float(i), float(-i), 0.5] for i in range(6)]
+    batch = pa.RecordBatch.from_pydict({"v": rows}).slice(2, 3)
+    assert _matrix(batch, "v").tolist() == rows[2:5]
+    assert _matrix(batch.slice(0, 0), "v").shape == (0, 0)
+
+
+@pytest.mark.parametrize("rows", [
+    [[1.0, 2.0], [3.0]],           # ragged
+    [[1.0], [2.0, 3.0], [4.0]],    # ragged, lengths sum to n * d
+    [[1.0, 2.0], None],            # null vector
+])
+def test_matrix_refuses_ragged_and_null_vectors(rows):
+    import pyarrow as pa
+
+    from harmonize_search_analyze_spark.operators.similarity import _matrix
+
+    batch = pa.RecordBatch.from_pydict(
+        {"emb": pa.array(rows, pa.list_(pa.float64()))}
+    )
+    with pytest.raises(ValueError, match="emb"):
+        _matrix(batch, "emb")
+
+
+def test_vector_map_skips_empty_input(spark):
+    from pyspark.sql import functions as F
+
+    from harmonize_search_analyze_spark.operators.similarity import (
+        _vector_map,
+        embedding_near_dup_lsh,
+    )
+
+    def fn(batch):
+        assert batch.num_rows
+        return {"id": batch.column("id")}
+
+    empty = spark.range(8).where(F.lit(False)).select(
+        "id", F.array(F.col("id").cast("double")).alias("v")
+    )
+    assert _vector_map(empty, fn, "id long").collect() == []
+    vecs = empty.select(F.col("id").alias("vec_id"),
+                        F.array_repeat(F.lit(1.0), 4).alias("embedding"))
+    assert embedding_near_dup_lsh(vecs, dim=4, n_bands=2,
+                                  bits_per_band=2).collect() == []
+
+
+def test_vector_map_builds_the_declared_types(spark):
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    from harmonize_search_analyze_spark.operators.similarity import (
+        _matrix,
+        _vector_map,
+    )
+
+    vecs = spark.range(5).select(
+        F.col("id").cast("int").alias("id"),
+        F.array(F.col("id").cast("double"), F.lit(0.0)).alias("v"),
+    )
+
+    def fn(batch):
+        x = _matrix(batch, "v")
+        return {
+            "id": batch.column("id"),               # int -> long
+            "v": batch.column("v"),                 # passes through
+            "ints": (x * 2).astype(np.int64),       # 2-D -> array<int>
+            "longs": (x * 3).astype(np.int32),      # 2-D -> array<long>
+            "cos": np.divide(x[:, 1], x[:, 1], where=x[:, 1] != 0,
+                             out=np.full(len(x), np.nan)),  # NaN -> null
+        }
+
+    ddl = ("id long, v array<double>, ints array<int>, longs array<long>,"
+           " cos double")
+    out = _vector_map(vecs, fn, ddl)
+    rows = sorted(out.collect())
+    assert [(f.name, f.dataType.simpleString()) for f in out.schema] == [
+        ("id", "bigint"), ("v", "array<double>"), ("ints", "array<int>"),
+        ("longs", "array<bigint>"), ("cos", "double"),
+    ]
+    assert [tuple(r) for r in rows] == [
+        (i, [float(i), 0.0], [2 * i, 0], [3 * i, 0], None) for i in range(5)
+    ]
