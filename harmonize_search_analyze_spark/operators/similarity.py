@@ -175,20 +175,6 @@ def ivf_assign(
     return centroids, assignments
 
 
-def _small_frame(spark, rows: list, ddl: str) -> DataFrame:
-    """Driver-assembled metadata frames (centroids / codebooks) as a ONE-
-    slice pickled RDD. ``createDataFrame(list)`` parallelizes into
-    defaultParallelism slices, so every downstream scan or collect of an
-    8-row centroid frame pays 32 near-empty Python-worker tasks at
-    local[32] — profiled round 11 as 6.5 s of blocked runTime on
-    kmeans_ivf's final ``_collect_centroids`` and the same shape on
-    pq_search_ivf's codebook reads. Array cells must keep the pickled
-    path (``local_frame``'s documented VALUES param-explosion crossover),
-    so the fix is the slice count, not the transport: same rows, same
-    schema, one task instead of 32."""
-    return spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), ddl)
-
-
 def _assign_literal(
     df: DataFrame,
     crows: list[tuple[int, list[float]]],
@@ -332,7 +318,7 @@ def kmeans_init_farthest(
     chosen = _init_farthest_rows(
         df, n_centroids, vec_col=vec_col, id_col=id_col
     )
-    return _small_frame(spark, chosen, "centroid_id INT, cvec ARRAY<DOUBLE>")
+    return local_frame(spark, chosen, "centroid_id INT, cvec ARRAY<DOUBLE>")
 
 
 def _init_oversample_rows(
@@ -472,7 +458,7 @@ def kmeans_train(
             if cid in by_cid else (cid, old)
             for cid, old in crows
         ]
-    return _small_frame(spark, crows, "centroid_id INT, cvec ARRAY<DOUBLE>")
+    return local_frame(spark, crows, "centroid_id INT, cvec ARRAY<DOUBLE>")
 
 
 def kmeans_inertia(
@@ -1363,7 +1349,7 @@ def pq_refs_codebooks(
     for cid, r in enumerate(rows):
         for j in range(m):
             out.append((j, cid, r["v"][j * d:(j + 1) * d]))
-    return _small_frame(
+    return local_frame(
         spark, out, "subspace INT, centroid_id INT, cvec ARRAY<DOUBLE>"
     )
 
@@ -1515,7 +1501,7 @@ def pq_train(
                 )
             else:
                 rows.append((key[0], key[1], list(r["cvec"])))
-        books = _small_frame(
+        books = local_frame(
             spark, rows, "subspace INT, centroid_id INT, cvec ARRAY<DOUBLE>"
         )
     return books
@@ -2510,8 +2496,8 @@ def mmr_rerank(
         .collect()
     )
     if not cand:
-        return df.sparkSession.createDataFrame(
-            [], f"rank INT, {id_col} BIGINT, score DOUBLE"
+        return local_frame(
+            df.sparkSession, [], f"rank INT, {id_col} BIGINT, score DOUBLE"
         )
 
     def _dot(a: list[float], b: list[float]) -> float:

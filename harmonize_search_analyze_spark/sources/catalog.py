@@ -27,6 +27,8 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from harmonize_search_analyze_spark.sources.tables import local_frame
+
 
 class Catalog:
     """In-session registry: name -> DataFrame, with wildcard union."""
@@ -215,7 +217,8 @@ class Catalog:
             for field, types in sorted(by_field.items())
             for t, idxs in sorted(types.items())
         ]
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             rows,
             "field string, type string, indices array<string>, "
             "searchable boolean, aggregatable boolean, is_conflict boolean",
@@ -233,7 +236,8 @@ class Catalog:
         ordered by index name."""
         names = self.resolve_names(pattern)
         if not names:
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [],
                 "index string, docs bigint, fields int, "
                 "aliases array<string>",

@@ -9,6 +9,8 @@ nanos as BIGINT and rebuild a proper timestamp with integer division
 
 from __future__ import annotations
 
+import datetime
+import decimal
 import glob
 import os
 
@@ -124,29 +126,28 @@ def load_table(
 
 # ``spark.createDataFrame(rows, schema)`` on a plain Python list always takes
 # the pickled-RDD path: the rows are parallelized into defaultParallelism
-# slices and scanned back through a Python-worker stage — measured ~0.27-0.36s
-# to materialize an 11-row frame at local[32] (~155 ms/task scheduling floor x
-# 32 near-empty tasks). A parameterized ``VALUES`` statement builds the same
-# rows as a pure-JVM LocalRelation instead: ~0.10-0.14s per materialization,
-# no Python workers, no RDD scan (optimization guide §4 — eliminate the
-# JVM<->Python boundary; §1.2 — fixed per-query costs). Named parameters
-# (:pN) carry the values, so string escaping is the literal binder's job,
-# and every cell is CAST to the declared type in the SQL text, pinning the
-# column wire types exactly as an explicit StructType does. Parse cost grows
-# with the parameter count and crosses over with the RDD path around ~300
-# parameters (measured), so above _MAX_PARAMS cells the rows travel as one
-# Arrow batch instead (``createDataFrame(pandas_df, schema)``): also a
-# LocalRelation, ~25 ms to build and collect a 672-cell frame against
-# ~160-190 ms and one job for the pickled-RDD path (local[4]).
-_LOCAL_FRAME_MAX_PARAMS = 256
+# slices and scanned back through a Python-worker stage, one job per collect.
+# One Arrow batch (``createDataFrame(pandas_df, schema)``) builds the same
+# rows as a JVM LocalRelation instead: collecting it runs no job and starts
+# no Python worker (optimization guide §4 — eliminate the JVM<->Python
+# boundary; §1.2 — fixed per-query costs). Build plus collect on local[4]
+# takes 20-26 ms from 2 to 960 cells, where a parameterized VALUES statement
+# took 35-454 ms and a one-slice pickled RDD of 16 64-dim centroids ~300 ms
+# (PERFORMANCE.md decision 13).
+_PY_OK = {
+    T.StringType: (str,), T.BooleanType: (bool,),
+    T.ByteType: (int,), T.ShortType: (int,), T.IntegerType: (int,),
+    T.LongType: (int,), T.FloatType: (float,), T.DoubleType: (float,),
+    T.DecimalType: (decimal.Decimal,), T.BinaryType: (bytes,),
+    T.TimestampType: (datetime.datetime,), T.DateType: (datetime.date,),
+}
+_EPOCH = datetime.datetime(1970, 1, 1, tzinfo=datetime.timezone.utc)
 
 
 def _local_frame_infer(rows: list, names: list[str]) -> "T.StructType | None":
     """Infer a StructType for a name-list schema the way createDataFrame
     would (int->LONG, float->DOUBLE, str->STRING, bool->BOOLEAN); None when
     any column's non-null cells disagree or use types outside that set."""
-    import datetime
-
     py2spark = {
         str: T.StringType(), bool: T.BooleanType(), int: T.LongType(),
         float: T.DoubleType(), bytes: T.BinaryType(),
@@ -170,25 +171,16 @@ def local_frame(
     spark: SparkSession, rows, schema
 ) -> DataFrame:
     """Drop-in for ``spark.createDataFrame(rows, schema)`` for SMALL
-    driver-assembled frames (stats rows, query-token frames, centroid-free
-    metadata): builds a JVM ``LocalRelation`` — via a parameterized VALUES
-    statement up to ``_LOCAL_FRAME_MAX_PARAMS`` cells, via one Arrow batch
-    above that — so collecting it runs no Spark job and starts no Python
-    worker. Falls back to ``createDataFrame`` whenever the schema is
-    unknown or a cell is outside the type allowlist below (lists/dicts/
-    Rows, mismatched types). Values and column wire types are identical
-    either way — the fallback IS the reference implementation.
-
-    Column NULLABILITY may differ from createDataFrame's all-nullable
-    default (a VALUES column with no NULL cell infers non-nullable).
-    Nullability is not part of any result surface here: collected values,
-    ``dtypes`` strings, and the DuckDB parity gate (names + type families
-    + values) are all nullability-blind, and the 382-query oracle mirror
-    stays green across the swap.
+    driver-assembled frames (panel buckets, stats rows, centroids and
+    codebooks): builds a JVM ``LocalRelation`` from one Arrow batch, so
+    collecting it runs no Spark job and starts no Python worker. An empty
+    frame is one all-NULL row cut by ``limit(0)``, which the optimizer
+    folds into an empty LocalRelation. Falls back to ``createDataFrame``
+    whenever the schema is unknown or a cell is outside the type
+    allowlist below (dicts, Rows, nested arrays, mismatched types). Values,
+    column types and nullability are identical either way — the fallback
+    IS the reference implementation.
     """
-    import datetime
-    import decimal
-
     rows = list(rows)  # materialize FIRST: generators must survive both
     # the inference pass and the fallback (review find, round 10)
 
@@ -199,7 +191,7 @@ def local_frame(
             schema_t = None  # not DDL createDataFrame can't also judge
         if not isinstance(schema_t, T.StructType):
             # bare atomic DDL ("long") parses to a non-struct DataType;
-            # createDataFrame accepts it, the VALUES path cannot
+            # createDataFrame accepts it, a row batch cannot
             schema_t = None
     elif isinstance(schema, T.StructType):
         schema_t = schema
@@ -210,66 +202,52 @@ def local_frame(
 
     if schema_t is None:
         return spark.createDataFrame(rows, schema)
-
-    # Exact python-type-per-field allowlist. STRICTER than
-    # createDataFrame's verifier on purpose: a mismatched cell (e.g. a
-    # stringified number into BIGINT, or bool into an integral column —
-    # bool is an int subclass, hence type() not isinstance) falls back
-    # to createDataFrame, which preserves the reference behavior
-    # LOUDLY instead of letting CAST coerce it silently (review find,
-    # round 10). Strictness only ever costs the fast path, never
-    # changes a value.
-    py_ok = {
-        T.StringType: (str,), T.BooleanType: (bool,),
-        T.ByteType: (int,), T.ShortType: (int,), T.IntegerType: (int,),
-        T.LongType: (int,), T.FloatType: (float,), T.DoubleType: (float,),
-        T.DecimalType: (decimal.Decimal,), T.BinaryType: (bytes,),
-        T.TimestampType: (datetime.datetime,), T.DateType: (datetime.date,),
-    }
-    allowed = []
-    for f in schema_t.fields:
-        ok = py_ok.get(type(f.dataType))
-        if ok is None:
-            return spark.createDataFrame(rows, schema)
-        allowed.append(ok)
-    for r in rows:
-        if len(r) != len(schema_t.fields) or not all(
-            v is None or type(v) in allowed[i] for i, v in enumerate(r)
-        ):
-            return spark.createDataFrame(rows, schema)
-
     fields = schema_t.fields
-    if not rows:
-        # one all-NULL row cut by LIMIT 0: the optimizer folds it into an
-        # empty LocalRelation, so even an empty frame collects without a job
-        return _values_frame(spark, [(None,) * len(fields)], fields).limit(0)
-    if len(rows) * len(fields) > _LOCAL_FRAME_MAX_PARAMS:
-        return _arrow_frame(spark, rows, schema_t)
-    out = _values_frame(spark, rows, fields)
-    if [(f.name, f.dataType) for f in out.schema.fields] != [
-        (f.name, f.dataType) for f in fields
-    ]:  # pragma: no cover - type pin must never drift silently
+    batch = rows or [(None,) * len(fields)]
+    if not all(
+        len(r) == len(fields)
+        and all(_cell_ok(f.dataType, v, f.nullable) for f, v in zip(fields, r))
+        for r in batch
+    ):
         return spark.createDataFrame(rows, schema)
-    return out
+    out = _arrow_frame(spark, batch, schema_t)
+    return out if rows else out.limit(0)
 
 
-def _values_frame(spark: SparkSession, rows: list, fields) -> DataFrame:
-    """``rows`` as a parameterized ``VALUES`` statement, each cell CAST to
-    its field's type."""
-    n = len(fields)
-    ddl = [f.dataType.simpleString() for f in fields]
-    parts = []
-    args: dict[str, object] = {}
-    for r_i, row in enumerate(rows):
-        base = r_i * n
-        parts.append("(" + ",".join(
-            f"CAST(:p{base + i} AS {ddl[i]})" for i in range(n)
-        ) + ")")
-        for i in range(n):
-            args[f"p{base + i}"] = row[i]
-    return spark.sql("VALUES " + ",".join(parts), args=args).toDF(
-        *[f.name for f in fields]
-    )
+def _cell_ok(t, v, nullable: bool) -> bool:
+    """Exact python-type-per-field allowlist, or an array of an allowlisted
+    element type. STRICTER than createDataFrame's verifier on purpose: a
+    mismatched cell (e.g. a stringified number into BIGINT, or bool into an
+    integral column — bool is an int subclass, hence type() not
+    isinstance) falls back to createDataFrame, which preserves the
+    reference behavior LOUDLY instead of letting the Arrow conversion
+    coerce it silently. Strictness only ever costs the fast path, never
+    changes a value."""
+    array = isinstance(t, T.ArrayType)
+    if type(t.elementType if array else t) not in _PY_OK:
+        return False
+    if v is None:
+        return nullable
+    if array:
+        return type(v) is list and all(
+            _cell_ok(t.elementType, x, t.containsNull) for x in v
+        )
+    return type(v) in _PY_OK[type(t)]
+
+
+def _arrow_cell(t, v):
+    """createDataFrame's own timestamp conversion (a naive datetime is
+    local wall time, resolved by time.mktime), carried as aware UTC so
+    both paths agree under any process time zone, DST gaps too."""
+    if v is None:
+        return None
+    if isinstance(t, T.TimestampType):
+        return _EPOCH + datetime.timedelta(microseconds=t.toInternal(v))
+    if isinstance(t, T.ArrayType) and isinstance(
+        t.elementType, T.TimestampType
+    ):
+        return [_arrow_cell(t.elementType, x) for x in v]
+    return v
 
 
 def _arrow_frame(spark: SparkSession, rows: list, schema_t) -> DataFrame:
@@ -277,22 +255,11 @@ def _arrow_frame(spark: SparkSession, rows: list, schema_t) -> DataFrame:
     Columns are object-dtype pandas Series, so a ``None`` in an integral
     column stays null instead of turning the column into float64, and
     columns are matched by position, so repeated names survive."""
-    import datetime
-
     import pandas as pd
 
-    epoch = datetime.datetime(1970, 1, 1, tzinfo=datetime.timezone.utc)
-    cols = {}
-    for i, f in enumerate(schema_t.fields):
-        vals = [r[i] for r in rows]
-        if isinstance(f.dataType, T.TimestampType):
-            # createDataFrame's own conversion (a naive datetime is local
-            # wall time, resolved by time.mktime), carried as aware UTC so
-            # both paths agree under any process time zone, DST gaps too
-            vals = [
-                None if v is None else epoch + datetime.timedelta(
-                    microseconds=f.dataType.toInternal(v))
-                for v in vals
-            ]
-        cols[i] = pd.Series(vals, dtype=object)
+    cols = {
+        i: pd.Series([_arrow_cell(f.dataType, r[i]) for r in rows],
+                     dtype=object)
+        for i, f in enumerate(schema_t.fields)
+    }
     return spark.createDataFrame(pd.DataFrame(cols), schema_t)

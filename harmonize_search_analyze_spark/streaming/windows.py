@@ -41,6 +41,9 @@ from pyspark.sql.streaming.stateful_processor import (
     TimerValues,
 )
 
+from harmonize_search_analyze_spark.functions import caching
+from harmonize_search_analyze_spark.sources.tables import local_frame
+
 EVENTS_SCHEMA = T.StructType([
     T.StructField("event_id", T.LongType()),
     T.StructField("ts", T.TimestampType()),
@@ -643,11 +646,11 @@ def scd2_upsert_stream(
     batch's MAX event timestamp — DATA-derived, so a replayed epoch
     computes the identical merge, and partial-snapshot semantics make
     re-applying an already-applied batch a no-op: exactly-once without
-    a transactional sink. The merged dimension is localCheckpoint'd
+    a transactional sink. The merged dimension is checkpointed eagerly
     BEFORE the overwrite (reading and overwriting the same path in one
-    lazy plan would race); a production deployment swaps the parquet
-    overwrite for a transactional table format, the merge plan is
-    unchanged.
+    lazy plan would race) and released after it; a production
+    deployment swaps the parquet overwrite for a transactional table
+    format, the merge plan is unchanged.
 
     Scale: the merge is one full-outer id join per epoch; history rows
     pass through untouched, so epoch cost tracks open-row count +
@@ -668,21 +671,23 @@ def scd2_upsert_stream(
         as_of = latest.agg(F.max(ts_col)).collect()[0][0]
         dim = _read_state_or_none(spark, dim_path)
         if dim is None:
-            dim = spark.createDataFrame(
+            dim = local_frame(
+                spark,
                 [],
                 latest.select(id_col, *tracked).schema.add(
                     "valid_from", "timestamp"
                 ).add("valid_to", "timestamp"),
             )
-        merged = scd2_merge(
+        merged = caching.checkpoint(scd2_merge(
             dim,
             latest.select(id_col, *tracked),
             id_col,
             tracked,
             str(as_of),
             close_missing=False,
-        ).localCheckpoint()
+        ), eager=True)
         merged.write.mode("overwrite").parquet(dim_path)
+        caching.release(merged)
 
     return (
         stream.writeStream.foreachBatch(_process)
@@ -732,18 +737,21 @@ def kmv_cardinality_stream(
             .limit(k)
         )
         state = _read_state_or_none(spark, state_path)
-        merged = (
+        merged = caching.checkpoint(
             batch_sketch if state is None
             else batch_sketch.unionByName(state).distinct()
-            .orderBy("h").limit(k)
-        ).localCheckpoint()
+            .orderBy("h").limit(k),
+            eager=True,
+        )
         merged.write.mode("overwrite").parquet(state_path)
         stats = merged.agg(
             F.count(F.lit(1)).alias("n"), F.max("h").alias("theta")
         ).collect()[0]
+        caching.release(merged)
         n, theta = stats["n"], stats["theta"]
         est = float(n) if n < k else (k - 1) * two60 / float(theta)
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(int(epoch_id), int(n), round(est, 4))],
             "epoch_id long, sketch_size long, est_distinct double",
         ).write.mode("append").parquet(out_path)
@@ -778,26 +786,28 @@ def cusum_process_batch(
     if batch_df.isEmpty():
         return
     spark = batch_df.sparkSession
-    counts = (
+    counts = caching.checkpoint(
         batch_df.where(F.col(ts_col).isNotNull())
         .groupBy(F.date_trunc(bucket_unit, ts_col).alias("bucket"))
-        .agg(F.count(F.lit(1)).alias("doc_count"))
-        .localCheckpoint()
+        .agg(F.count(F.lit(1)).alias("doc_count")),
+        eager=True,
     )
     counts.write.mode("overwrite").parquet(
         f"{state_path}/epoch={int(epoch_id)}"
     )
+    caching.release(counts)
     totals = (
         spark.read.parquet(state_path)
         .groupBy("bucket")
         .agg(F.sum("doc_count").alias("doc_count"))
     )
-    monitor = cusum_change(
-        totals, "bucket", "doc_count", k=k, h=h
-    ).localCheckpoint()
+    monitor = caching.checkpoint(
+        cusum_change(totals, "bucket", "doc_count", k=k, h=h), eager=True
+    )
     monitor.write.mode("overwrite").parquet(
         f"{out_path}/epoch={int(epoch_id)}"
     )
+    caching.release(monitor)
 
 
 def cusum_stream(
@@ -865,7 +875,7 @@ def sprt_process_batch(
     if batch_df.isEmpty():
         return
     spark = batch_df.sparkSession
-    counts = (
+    counts = caching.checkpoint(
         batch_df.where(
             F.expr(treatment_expr) & F.col(ts_col).isNotNull()
         )
@@ -873,23 +883,25 @@ def sprt_process_batch(
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.count(F.when(F.expr(success_expr), 1)).alias("x"),
-        )
-        .localCheckpoint()
+        ),
+        eager=True,
     )
     counts.write.mode("overwrite").parquet(
         f"{state_path}/epoch={int(epoch_id)}"
     )
+    caching.release(counts)
     totals = (
         spark.read.parquet(state_path)
         .groupBy("day")
         .agg(F.sum("n").alias("__n"), F.sum("x").alias("__x"))
     )
-    trace = sprt_trace(
-        totals, p0=p0, p1=p1, alpha=alpha, beta=beta
-    ).localCheckpoint()
+    trace = caching.checkpoint(
+        sprt_trace(totals, p0=p0, p1=p1, alpha=alpha, beta=beta), eager=True
+    )
     trace.write.mode("overwrite").parquet(
         f"{out_path}/epoch={int(epoch_id)}"
     )
+    caching.release(trace)
 
 
 def sprt_stream(
@@ -1021,10 +1033,11 @@ def mg_process_batch(
     if batch_df.isEmpty():
         return
     spark = batch_df.sparkSession
-    summary = mg_summary(batch_df, key_col, m).localCheckpoint()
+    summary = caching.checkpoint(mg_summary(batch_df, key_col, m), eager=True)
     summary.write.mode("overwrite").parquet(
         f"{state_path}/epoch={int(epoch_id)}"
     )
+    caching.release(summary)
     # merge ONLY epochs <= N: the epoch-N output is the stream summary
     # AS OF epoch N, so a replayed middle epoch rewrites its historical
     # output byte-identically even after later epochs landed
@@ -1058,7 +1071,7 @@ def mg_process_batch(
         .agg(F.max("n_batch").alias("nb"))
         .agg(F.sum("nb").alias("__n"))
     )
-    out = (
+    out = caching.checkpoint(
         trimmed.orderBy(F.desc("c"), F.asc("key"))
         .limit(top)
         .crossJoin(F.broadcast(trimmed.agg(F.sum("c").alias("__sc"))))
@@ -1068,9 +1081,11 @@ def mg_process_batch(
             "key",
             F.col("c").alias("count_min"),
             (F.col("__n") - F.col("__sc")).alias("err_bound"),
-        )
-    ).localCheckpoint()
+        ),
+        eager=True,
+    )
     out.write.mode("overwrite").parquet(f"{out_path}/epoch={int(epoch_id)}")
+    caching.release(out)
 
 
 def mg_topk_stream(

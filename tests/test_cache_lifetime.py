@@ -3,8 +3,10 @@
 An intermediate an operator stores for its lazy plan must stay stored for
 as long as any plan reads it, including frames the query or the caller
 derives from the operator's result after the result itself is dropped.
-``release`` frees every checkpoint an operator made, its loops' included.
-The source guard keeps that one mechanism the only one in the operators.
+``release`` frees every checkpoint an operator made, its loops' included,
+and a stream's epoch frees its own. The source guards keep that one
+mechanism the only one in the operators and the streams, and
+``sources.tables.local_frame`` the one builder of driver-assembled frames.
 """
 
 from __future__ import annotations
@@ -24,8 +26,9 @@ from harmonize_search_analyze_spark.operators.similarity import (
     embedding_near_dup_lsh,
 )
 
-OPERATORS = (pathlib.Path(__file__).resolve().parents[1]
-             / "harmonize_search_analyze_spark" / "operators")
+PACKAGE = (pathlib.Path(__file__).resolve().parents[1]
+           / "harmonize_search_analyze_spark")
+OPERATORS = PACKAGE / "operators"
 
 # queries whose plan derives a new frame from an operator result that
 # stores an intermediate, and then drops the result
@@ -129,12 +132,58 @@ def test_release_frees_every_checkpoint_the_operator_made(spark, name):
     assert _stored(spark) <= before
 
 
-@pytest.mark.parametrize("path", sorted(OPERATORS.glob("*.py")),
-                         ids=lambda p: p.name)
+def test_stream_epochs_release_their_checkpoints(spark, tmp_path):
+    # two micro-batches through the SCD2 upsert: each epoch's eager
+    # checkpoint is freed once its write is done
+    import datetime as dt
+
+    from pyspark.sql import types as T
+
+    from harmonize_search_analyze_spark.streaming.windows import (
+        read_document_stream,
+        scd2_upsert_stream,
+    )
+
+    schema = T.StructType([
+        T.StructField("id", T.LongType()),
+        T.StructField("seg", T.StringType()),
+        T.StructField("ts", T.TimestampType()),
+    ])
+    src = tmp_path / "src"
+    for wave, mode in [([(1, "a", dt.datetime(2025, 1, 1)),
+                         (2, "b", dt.datetime(2025, 1, 1))], "overwrite"),
+                       ([(2, "c", dt.datetime(2025, 2, 1))], "append")]:
+        spark.createDataFrame(wave, schema).coalesce(1).write.mode(
+            mode).parquet(str(src))
+    before = _stored(spark)
+    q = scd2_upsert_stream(
+        read_document_stream(spark, str(src), schema),
+        str(tmp_path / "dim"), str(tmp_path / "ckpt"),
+        id_col="id", tracked=["seg"], ts_col="ts",
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    assert spark.read.parquet(str(tmp_path / "dim")).count() == 3
+    assert _stored(spark) <= before
+
+
+@pytest.mark.parametrize(
+    "path",
+    sorted(OPERATORS.glob("*.py"))
+    + sorted((PACKAGE / "streaming").glob("*.py")),
+    ids=lambda p: p.name,
+)
 def test_operators_use_one_lifetime_mechanism(path):
     src = path.read_text()
-    # the per-site A/B kept no scoped persist (PERFORMANCE.md decision 10)
-    assert not re.search(r"\btether|\btransfer\(|\.persist\(|\.cache\(\)", src)
+    assert not re.search(r"\btether|\btransfer\(|\.cache\(\)", src)
+    # the per-site A/B kept no persist in the operators (PERFORMANCE.md
+    # decision 10); a stream's persist is scoped to one micro-batch
+    if path.parent == OPERATORS:
+        assert ".persist(" not in src
+    else:
+        assert src.count(".persist(") == src.count(".unpersist(")
     # a raw checkpoint, lazy or eager, is one release cannot free
     assert ".localCheckpoint(" not in src
     # fixpoints are caching.iterate's; Observation stays only for metrics
@@ -145,3 +194,17 @@ def test_operators_use_one_lifetime_mechanism(path):
                 == "harmonize_search_analyze_spark.functions.caching"):
             assert ({a.name for a in node.names}
                     <= {"checkpoint", "iterate", "release"})
+
+
+def test_driver_frames_have_one_builder():
+    """Driver-assembled frames are built by ``sources.tables.local_frame``
+    only: no other module calls createDataFrame or builds a VALUES
+    statement."""
+    found = [
+        f"{p.relative_to(PACKAGE)}:{n}"
+        for p in sorted(PACKAGE.rglob("*.py"))
+        if p.relative_to(PACKAGE).as_posix() != "sources/tables.py"
+        for n, line in enumerate(p.read_text().splitlines(), 1)
+        if "createDataFrame(" in line or 'spark.sql("VALUES' in line
+    ]
+    assert found == []

@@ -1,19 +1,18 @@
-"""local_frame (sources/tables.py): the JVM-LocalRelation fast paths for
-small driver-assembled frames (VALUES up to the parameter cap, one Arrow
-batch above it) must be value- and wire-type-identical to
-spark.createDataFrame, and must fall back to createDataFrame whenever the
-schema is unknown or a cell is outside the type allowlist."""
+"""local_frame (sources/tables.py): the one JVM-LocalRelation builder for
+small driver-assembled frames (one Arrow batch) must be value-, wire-type-
+and nullability-identical to spark.createDataFrame, collect without a job,
+and fall back to createDataFrame whenever the schema is unknown or a cell is
+outside the type allowlist."""
 
 from __future__ import annotations
 
 import datetime
+import decimal
 
+import pytest
 from pyspark.sql import types as T
 
-from harmonize_search_analyze_spark.sources.tables import (
-    _LOCAL_FRAME_MAX_PARAMS,
-    local_frame,
-)
+from harmonize_search_analyze_spark.sources.tables import local_frame
 
 
 def _same(spark, rows, schema):
@@ -76,11 +75,15 @@ def test_fallback_on_empty_rows(spark):
 
 
 def test_fallback_on_array_cells(spark):
-    rows = [(0, [1.0, 2.0])]
-    df = local_frame(spark, rows, "centroid_id INT, cvec ARRAY<DOUBLE>")
-    assert [tuple(r) for r in df.collect()] == [(0, [1.0, 2.0])]
-    plan = df._jdf.queryExecution().optimizedPlan().toString()
-    assert "LocalRelation" not in plan  # took the createDataFrame path
+    # an array of arrays, or an array cell holding a mistyped element, is
+    # outside the allowlist: createDataFrame builds it
+    for rows, ddl in [
+        ([(0, [[1.0], [2.0, 3.0]])], "i INT, m ARRAY<ARRAY<DOUBLE>>"),
+        ([(0, (1.0, 2.0))], "i INT, v ARRAY<DOUBLE>"),
+    ]:
+        df = _same(spark, rows, ddl)
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert "LocalRelation" not in plan  # took the createDataFrame path
 
 
 def _collect_jobs(spark, df) -> tuple[list, int]:
@@ -105,7 +108,6 @@ def test_param_overflow_takes_arrow_local_relation(spark):
          if i % 4 else None)
         for i in range(168)
     ]
-    assert len(rows) * 4 > _LOCAL_FRAME_MAX_PARAMS
     schema = "n BIGINT, x DOUBLE, s STRING, ts TIMESTAMP"
     df = local_frame(spark, rows, schema)
     ref = spark.createDataFrame(rows, schema)
@@ -179,3 +181,49 @@ def test_name_list_mixed_column_falls_back(spark):
         spark.createDataFrame(rows, ["x"])
     with pytest.raises(PySparkTypeError):
         local_frame(spark, rows, ["x"])
+
+
+@pytest.mark.parametrize("cells", [2, 20, 60, 256, 960])
+def test_every_size_is_one_local_relation(spark, cells):
+    # 2 columns, 1 to 480 rows, a NULL in each column
+    rows = [(i if i % 7 else None, f"k{i}" if i % 5 else None)
+            for i in range(cells // 2)]
+    schema = "n BIGINT, s STRING"
+    df = local_frame(spark, rows, schema)
+    ref = spark.createDataFrame(rows, schema)
+    assert df.dtypes == ref.dtypes
+    got, jobs = _collect_jobs(spark, df)
+    assert got == ref.collect()
+    assert jobs == 0
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.startswith("LocalRelation")
+
+
+def test_every_allowlisted_type_and_array_cells(spark):
+    rows = [
+        (decimal.Decimal("1234567.125"), b"\x00\xff",
+         datetime.date(1999, 12, 31), -128, 32767, 1.5, True,
+         [1.0, None, -2.5], ["a", None, ""]),
+        (None, b"", None, 127, None, None, False, [], []),
+        (decimal.Decimal("-0.001"), None, datetime.date(1970, 1, 1), None,
+         -32768, -0.25, None, None, None),
+    ]
+    ddl = ("d DECIMAL(10,3), b BINARY, dt DATE, t TINYINT, sm SMALLINT, "
+           "f FLOAT, bo BOOLEAN, av ARRAY<DOUBLE>, as_ ARRAY<STRING>")
+    df = local_frame(spark, rows, ddl)
+    ref = spark.createDataFrame(rows, ddl)
+    assert df.dtypes == ref.dtypes
+    got, jobs = _collect_jobs(spark, df)
+    assert got == ref.collect()
+    assert jobs == 0
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.startswith("LocalRelation")
+
+
+def test_schema_matches_ddl_nullability_included(spark):
+    # no NULL cell in any column: still nullable, as createDataFrame makes it
+    ddl = "rank INT, piece STRING, logprob DOUBLE"
+    df = local_frame(spark, [(0, "a", 1.5), (1, "b", 2.0)], ddl)
+    assert df.schema == T.StructType.fromDDL(ddl)
+    assert df.schema == spark.createDataFrame([], ddl).schema
+    assert local_frame(spark, [], ddl).schema == T.StructType.fromDDL(ddl)

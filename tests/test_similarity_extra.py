@@ -554,41 +554,77 @@ def test_simplified_silhouette_single_centroid_refused(spark):
         simplified_silhouette(pts, "id", "v", cents)
 
 
-# -- similarity._small_frame (one-slice metadata frames) ---------------------
+# -- driver-assembled centroid / codebook frames ------------------------------
+# Centroids and codebooks are built on the driver through local_frame: one
+# LocalRelation, so reading them back fans out no near-empty Python-worker
+# tasks and runs no job.
 
 
-def test_small_frame_one_slice_and_values(spark):
-    from harmonize_search_analyze_spark.operators import similarity as sm
+def _collect_jobs(spark, df) -> tuple[list, int]:
+    sc = spark.sparkContext
+    group = f"driver-frame-{id(df)}"
+    try:
+        sc.setJobGroup(group, "collect")
+        rows = df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    return rows, len(sc.statusTracker().getJobIdsForGroup(group))
 
-    rows = [(0, [1.0, 2.0]), (1, [3.0, 4.0]), (2, [5.0, 6.0])]
-    ddl = "centroid_id INT, cvec ARRAY<DOUBLE>"
-    one = sm._small_frame(spark, rows, ddl)
-    assert one.rdd.getNumPartitions() == 1
-    ref = spark.createDataFrame(rows, ddl)
-    assert sorted(map(tuple, one.collect())) == sorted(map(tuple, ref.collect()))
-    assert one.schema == ref.schema
+
+def _is_local_relation(df) -> bool:
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return plan.startswith("LocalRelation")
 
 
-def test_small_frame_empty(spark):
-    from harmonize_search_analyze_spark.operators import similarity as sm
+def _grid(spark):
+    return spark.createDataFrame(
+        [(i, [float(i % 4), float(i // 4)]) for i in range(16)],
+        "vec_id LONG, embedding ARRAY<DOUBLE>",
+    )
 
-    out = sm._small_frame(spark, [], "centroid_id INT, cvec ARRAY<DOUBLE>")
-    assert out.count() == 0
+
+def test_pq_codebooks_are_one_local_relation(spark):
+    from harmonize_search_analyze_spark.operators.similarity import (
+        pq_refs_codebooks,
+        pq_train,
+    )
+
+    vecs = _grid(spark)
+    ddl = "subspace INT, centroid_id INT, cvec ARRAY<DOUBLE>"
+    refs = pq_refs_codebooks(vecs, [0, 5, 10], m=2)
+    assert refs.schema == spark.createDataFrame([], ddl).schema
+    assert sorted(map(tuple, refs.collect())) == sorted(
+        (j, cid, [v[j]])
+        for cid, v in enumerate([[0.0, 0.0], [1.0, 1.0], [2.0, 2.0]])
+        for j in range(2)
+    )
+    books = pq_train(vecs, m=2, n_centroids=4, n_iters=2)
+    assert books.schema == refs.schema
+    assert _is_local_relation(books)
+    got, jobs = _collect_jobs(spark, books)
+    assert jobs == 0
+    assert len(got) == 2 * 4
+
+
+def test_centroid_frame_empty(spark):
+    from harmonize_search_analyze_spark.sources.tables import local_frame
+
+    out = local_frame(spark, [], "centroid_id INT, cvec ARRAY<DOUBLE>")
     assert [f.name for f in out.schema.fields] == ["centroid_id", "cvec"]
+    assert _collect_jobs(spark, out) == ([], 0)
 
 
-def test_kmeans_train_returns_one_slice_centroids(spark):
+def test_kmeans_train_centroids_collect_without_job(spark):
     from harmonize_search_analyze_spark.operators.similarity import (
         kmeans_train,
     )
 
-    vecs = spark.createDataFrame(
-        [(i, [float(i % 4), float(i // 4)]) for i in range(16)],
-        "vec_id LONG, embedding ARRAY<DOUBLE>",
-    )
-    cents = kmeans_train(vecs, n_centroids=4, n_iters=2)
-    assert cents.rdd.getNumPartitions() == 1
-    assert cents.count() == 4
+    cents = kmeans_train(_grid(spark), n_centroids=4, n_iters=2)
+    assert _is_local_relation(cents)
+    got, jobs = _collect_jobs(spark, cents)
+    assert jobs == 0
+    assert len(got) == 4
 
 
 def test_similarity_stages_use_the_arrow_vector_helper():
