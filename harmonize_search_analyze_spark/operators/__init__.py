@@ -1,77 +1,5 @@
-from harmonize_search_analyze_spark.operators.curation_pipeline import (
-    run_corpus_pipeline,
-)
-from harmonize_search_analyze_spark.operators.ingest_pipeline import (
-    run_pipeline,
-)
-from harmonize_search_analyze_spark.operators.retriever import run_retriever
-from harmonize_search_analyze_spark.operators.sharding import (
-    assign_shards,
-    shard_manifest,
-    write_webdataset_shards,
-)
-from harmonize_search_analyze_spark.operators.unigram import (
-    unigram_encode,
-    unigram_train,
-)
-from harmonize_search_analyze_spark.operators.aggregations import (
-    count_metric,
-    geohash_grid,
-    nested_terms,
-    suggest,
-    terms,
-)
-from harmonize_search_analyze_spark.operators.kibana import (
-    dashboard_from_export,
-    panels_from_export,
-    parse_saved_objects,
-)
-from harmonize_search_analyze_spark.operators.bloom import (
-    bloom_build,
-    bloom_dedup,
-    bloom_merge,
-)
-from harmonize_search_analyze_spark.operators.dsir import (
-    dsir_sample,
-    dsir_weights,
-)
-from harmonize_search_analyze_spark.operators.joins import (
-    has_child,
-    has_parent,
-)
-from harmonize_search_analyze_spark.operators.profiler import build_data_dict
-from harmonize_search_analyze_spark.operators.ranking import (
-    distance_feature,
-    rank_feature,
-    scroll_pages,
-)
-
-__all__ = [
-    "assign_shards",
-    "run_corpus_pipeline",
-    "run_pipeline",
-    "run_retriever",
-    "shard_manifest",
-    "unigram_encode",
-    "unigram_train",
-    "write_webdataset_shards",
-    "distance_feature",
-    "has_child",
-    "has_parent",
-    "rank_feature",
-    "scroll_pages",
-    "bloom_build",
-    "bloom_dedup",
-    "bloom_merge",
-    "dsir_sample",
-    "dsir_weights",
-    "build_data_dict",
-    "dashboard_from_export",
-    "panels_from_export",
-    "parse_saved_objects",
-    "count_metric",
-    "geohash_grid",
-    "nested_terms",
-    "suggest",
-    "terms",
-]
+"""The engine's operators, one module per family (``aggregations``,
+``dedup``, ``similarity``, ``graph``, ...). Import the module you call:
+this package imports none of them, so a Python worker that unpickles a
+function from one module (``similarity._matrix`` in every vector stage)
+loads that module alone."""

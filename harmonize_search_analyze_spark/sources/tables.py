@@ -221,8 +221,11 @@ def _cell_ok(t, v, nullable: bool) -> bool:
     integral column — bool is an int subclass, hence type() not
     isinstance) falls back to createDataFrame, which preserves the
     reference behavior LOUDLY instead of letting the Arrow conversion
-    coerce it silently. Strictness only ever costs the fast path, never
-    changes a value."""
+    coerce it silently. A Decimal with more fractional digits than the
+    field's scale, or more integer digits than its precision leaves, falls
+    back too: Arrow refuses that rescale, and pyspark would then retry it
+    as a pickled RDD with a warning. Strictness only ever costs the fast
+    path, never changes a value."""
     array = isinstance(t, T.ArrayType)
     if type(t.elementType if array else t) not in _PY_OK:
         return False
@@ -232,7 +235,14 @@ def _cell_ok(t, v, nullable: bool) -> bool:
         return type(v) is list and all(
             _cell_ok(t.elementType, x, t.containsNull) for x in v
         )
-    return type(v) in _PY_OK[type(t)]
+    if type(v) not in _PY_OK[type(t)]:
+        return False
+    if type(v) is decimal.Decimal:
+        if not v.is_finite():
+            return False
+        _, digits, exp = v.as_tuple()
+        return -exp <= t.scale and len(digits) + exp <= t.precision - t.scale
+    return True
 
 
 def _arrow_cell(t, v):

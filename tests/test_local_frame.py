@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import datetime
 import decimal
+import warnings
 
 import pytest
 from pyspark.sql import types as T
@@ -227,3 +228,15 @@ def test_schema_matches_ddl_nullability_included(spark):
     assert df.schema == T.StructType.fromDDL(ddl)
     assert df.schema == spark.createDataFrame([], ddl).schema
     assert local_frame(spark, [], ddl).schema == T.StructType.fromDDL(ddl)
+
+
+def test_decimal_past_the_scale_falls_back_silently(spark):
+    # more fractional digits than DECIMAL(10,3) holds: Arrow refuses the
+    # rescale, so the cell takes createDataFrame's rounding, with no warning
+    rows = [(decimal.Decimal("1.23456"),), (decimal.Decimal("2.5"),)]
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", UserWarning)
+        got = local_frame(spark, rows, "d DECIMAL(10,3)").collect()
+    assert got == spark.createDataFrame(rows, "d DECIMAL(10,3)").collect()
+    assert [r.d for r in got] == [decimal.Decimal("1.235"),
+                                  decimal.Decimal("2.500")]

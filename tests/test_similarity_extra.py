@@ -639,6 +639,25 @@ def test_similarity_stages_use_the_arrow_vector_helper():
         assert banned not in src, banned
 
 
+def test_similarity_import_loads_no_sibling_operators():
+    """A Python worker unpickling ``_matrix`` imports ``operators.similarity``;
+    the ``operators`` package must not pull every other operator in too."""
+    import subprocess
+    import sys
+
+    code = (
+        "import sys\n"
+        "import harmonize_search_analyze_spark.operators.similarity\n"
+        "p = 'harmonize_search_analyze_spark.operators.'\n"
+        "print(sorted(m for m in sys.modules if m.startswith(p)))\n"
+    )
+    out = subprocess.run([sys.executable, "-c", code], check=True,
+                         capture_output=True, text=True).stdout
+    for sibling in ("aggregations", "text", "curation_pipeline"):
+        assert f"operators.{sibling}'" not in out, out
+    assert "operators.similarity'" in out
+
+
 def test_matrix_reads_a_sliced_batch_at_its_offset():
     import pyarrow as pa
 
